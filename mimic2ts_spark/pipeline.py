@@ -10,11 +10,14 @@ The reference instead hash-shuffles on stay_id and runs nested Python
 group-applies per stay (/root/reference/src/mimic2ts/__init__.py:213-215);
 the flat agg removes the per-group memory cliff and lets AQE handle stay
 skew. Exactly one shuffle (the composite-key agg) per source; the stay dim
-is broadcast; everything is whole-stage-codegen'd.
+is broadcast; everything is whole-stage-codegen'd. The enabled sources'
+plans are unioned into one tagged long form, so the CSV sink runs once
+per run for all of them (`write_csv_sink`).
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from collections.abc import Sequence
 
@@ -147,11 +150,7 @@ class BaseAggregator:
 
     def do_agg(self) -> None:
         """Run the plan and write the per-stay wide CSV matrices (S3/S4)."""
-        result = self.aggregate()
-        produced = write_stay_matrices(result, self.dst_path, self.name)
-        write_empty_stay_files(
-            self.requested_stays(), produced, self.dst_path, self.name
-        )
+        write_csv_sink([self])
 
 
 class ChartEventAggregator(BaseAggregator):
@@ -257,11 +256,32 @@ class ProcedureEventAggregator(_IntervalAggregator):
         return F.col("value").cast("double")  # :409-410
 
 
+def tagged_long_form(aggregators: Sequence[BaseAggregator]) -> DataFrame:
+    """The sources' dense long forms as one lazy DataFrame
+    `(stay_id, feature_id, tidx, value, source)`, `source` being each
+    aggregator's name."""
+    return functools.reduce(
+        DataFrame.unionByName,
+        [agg.aggregate().withColumn("source", F.lit(agg.name)) for agg in aggregators],
+    )
+
+
+def write_csv_sink(aggregators: Sequence[BaseAggregator]) -> None:
+    """Write every (stay, source) CSV of the given aggregators (S3/S4):
+    one grouped writer over their tagged long form and one empty-stay
+    pass. The aggregators share dst_path and the requested stays."""
+    first = aggregators[0]
+    names = tuple(agg.name for agg in aggregators)
+    produced = write_stay_matrices(tagged_long_form(aggregators), first.dst_path, names)
+    write_empty_stay_files(first.requested_stays(), produced, first.dst_path, names)
+
+
 class EventsAggregator:
     """Top-level orchestrator mirroring the reference's EventsAggregator
     (/root/reference/src/mimic2ts/__init__.py:461-539): one aggregator per
-    enabled source. Sources share one SparkSession and run sequentially as
-    independent jobs (each is internally fully parallel)."""
+    enabled source, all sharing one SparkSession and one stay dimension.
+    `do_agg` writes every source in one sink pass (`write_csv_sink`), not
+    one job chain per source."""
 
     _CLASSES = {
         "chartevents": ChartEventAggregator,
@@ -296,7 +316,11 @@ class EventsAggregator:
             for name, cls in self._CLASSES.items()
             if enabled[name]
         ]
+        if self.aggregators:
+            stays = sources.load_stays(spark, mimic_path, timestep_seconds)
+            for agg in self.aggregators:
+                agg._stays = stays
 
     def do_agg(self) -> None:
-        for agg in self.aggregators:
-            agg.do_agg()
+        if self.aggregators:
+            write_csv_sink(self.aggregators)

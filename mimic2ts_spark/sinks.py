@@ -8,6 +8,13 @@ declarative Spark sink produces — so this is the engine's ONE grouped
 pandas escape hatch (`groupBy(stay_id).applyInPandas`), as planned in
 SURVEY.md §4 "Sink layout". Everything upstream stays native.
 
+The CSV sink is one pass per run for every enabled source: the sources'
+long forms arrive as one DataFrame tagged with a `source` column, one
+pandas group per stay writes all of that stay's files, and one Arrow
+(`mapInPandas`) pass writes the header-only files of event-less stays.
+Each file is written under a temp name and renamed into place, so a
+killed or retried task never leaves a truncated CSV.
+
 For engine-native output (the recommended path at scale), use
 `write_long_parquet`: partitioned parquet with Spark's commit protocol —
 retry-safe, unlike the reference's in-task writes.
@@ -16,19 +23,57 @@ retry-safe, unlike the reference's in-task writes.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+PARQUET_STAY_BUCKETS = 256
 
-def write_stay_matrices(long_df: DataFrame, dst_path: str, name: str) -> DataFrame:
-    """Pivot per stay and write `{dst}/{stay_id}/{name}_features.csv`.
 
-    Input must be the dense long form (every tidx 0..total_windows present
-    per feature). Output layout parity: rows indexed by feature_id
-    (ascending), columns `feature_id, 0..total_windows`
-    (/root/reference/README.md:65-77).
+def _replace_csv(frame: pd.DataFrame, path: str, **to_csv) -> None:
+    """Write `frame` as CSV to a hidden temp name beside `path`, then
+    rename it over `path` (atomic on POSIX).
+
+    A task killed mid-write, or a speculative duplicate, leaves at most
+    the temp file (the pid keeps concurrent writers apart), never a
+    truncated CSV under the final name."""
+    head, tail = os.path.split(path)
+    tmp = os.path.join(head, f".{tail}.{os.getpid()}.tmp")
+    try:
+        frame.to_csv(tmp, **to_csv)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
+def _write_header_only(path: str, total_windows: int) -> None:
+    cols = ["feature_id", *range(total_windows + 1)]
+    _replace_csv(pd.DataFrame(columns=cols), path, index=False)
+
+
+def write_stay_matrices(
+    long_df: DataFrame, dst_path: str, names: Sequence[str]
+) -> DataFrame:
+    """Pivot per stay and write `{dst}/{stay_id}/{name}_features.csv`
+    for every source in `names`.
+
+    Input is the dense long form of all those sources
+    `(stay_id, feature_id, tidx, value, source)`: every tidx
+    0..total_windows present per (stay, source, feature). Output layout
+    parity with the reference README: rows indexed by feature_id
+    (ascending), columns `feature_id, 0..total_windows`. A source with
+    no rows for a stay gets a header-only file; the dense reindex makes
+    the stay's max tidx its total_windows.
+
+    The rows are hash-partitioned on stay_id to the session's default
+    parallelism before the grouping (which reuses that partitioning, so
+    there is one Exchange): AQE may coalesce a shuffle it sized itself,
+    and the small long form would otherwise run this CPU-bound writer
+    as a single task.
 
     Returns the LAZY produced-stays DataFrame `(stay_id, n_features)` —
     the files are written executor-side when a downstream action runs it
@@ -37,17 +82,30 @@ def write_stay_matrices(long_df: DataFrame, dst_path: str, name: str) -> DataFra
     materialized: at millions of stays the produced set stays
     distributed.
     """
+    parts = long_df.sparkSession.sparkContext.defaultParallelism
 
     def _write(pdf: pd.DataFrame) -> pd.DataFrame:
         stay_id = int(pdf["stay_id"].iloc[0])
-        wide = pdf.pivot(index="feature_id", columns="tidx", values="value")
-        wide = wide.reindex(sorted(wide.columns), axis=1).sort_index()
+        total_windows = int(pdf["tidx"].max())
+        by_source = dict(iter(pdf.groupby("source", sort=False)))
         os.makedirs(f"{dst_path}/{stay_id}", exist_ok=True)
-        wide.to_csv(f"{dst_path}/{stay_id}/{name}_features.csv")
-        return pd.DataFrame({"stay_id": [stay_id], "n_features": [wide.shape[0]]})
+        n_features = 0
+        for name in names:
+            path = f"{dst_path}/{stay_id}/{name}_features.csv"
+            rows = by_source.get(name)
+            if rows is None:
+                _write_header_only(path, total_windows)
+                continue
+            wide = rows.pivot(index="feature_id", columns="tidx", values="value")
+            wide = wide.reindex(sorted(wide.columns), axis=1).sort_index()
+            _replace_csv(wide, path)
+            n_features += wide.shape[0]
+        return pd.DataFrame({"stay_id": [stay_id], "n_features": [n_features]})
 
-    return long_df.groupBy("stay_id").applyInPandas(
-        _write, schema="stay_id long, n_features long"
+    return (
+        long_df.repartition(parts, "stay_id")
+        .groupBy("stay_id")
+        .applyInPandas(_write, schema="stay_id long, n_features long")
     )
 
 
@@ -61,10 +119,14 @@ def missing_stays(requested_stays: DataFrame, produced: DataFrame) -> DataFrame:
 
 
 def write_empty_stay_files(
-    requested_stays: DataFrame, produced: DataFrame, dst_path: str, name: str
+    requested_stays: DataFrame,
+    produced: DataFrame,
+    dst_path: str,
+    names: Sequence[str],
 ) -> None:
-    """Header-only CSV for every requested stay with no events (S4),
-    written executor-side via foreachPartition.
+    """Header-only CSV of every source in `names` for every requested
+    stay with no events (S4), written executor-side by one Arrow
+    `mapInPandas` pass into a `noop` sink.
 
     Triggering this action also executes the `produced` applyInPandas
     subtree (the per-stay matrix writes) exactly once — one job drives
@@ -72,31 +134,40 @@ def write_empty_stay_files(
     stay), so task retries are safe.
     """
 
-    def _write_partition(rows) -> None:
-        import os as _os
+    def _write(batches):
+        for batch in batches:
+            for sid, total_windows in zip(batch["stay_id"], batch["total_windows"]):
+                os.makedirs(f"{dst_path}/{sid}", exist_ok=True)
+                for name in names:
+                    _write_header_only(f"{dst_path}/{sid}/{name}_features.csv",
+                                       int(total_windows))
+            yield batch[["stay_id"]]
 
-        import pandas as _pd
-
-        for row in rows:
-            sid = int(row["stay_id"])
-            _os.makedirs(f"{dst_path}/{sid}", exist_ok=True)
-            cols = ["feature_id"] + list(range(0, int(row["total_windows"]) + 1))
-            _pd.DataFrame(columns=cols).to_csv(
-                f"{dst_path}/{sid}/{name}_features.csv", index=False
-            )
-
-    missing_stays(requested_stays, produced).foreachPartition(_write_partition)
+    (
+        missing_stays(requested_stays, produced)
+        .mapInPandas(_write, schema="stay_id long")
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
 
 
 def write_long_parquet(long_df: DataFrame, dst_path: str, name: str) -> None:
     """Scale-native sink: long-form parquet partitioned by stay bucket.
 
     Partitioning by raw stay_id would create one directory per stay
-    (millions of tiny files at 100 TB); a hash bucket keeps file counts
-    bounded while preserving stay locality for downstream readers.
+    (millions of tiny files at 100 TB). Rows are hash-bucketed on stay_id
+    and repartitioned on the bucket first, so each bucket is written by
+    one task: at most PARQUET_STAY_BUCKETS files, one per directory,
+    whatever the shuffle-partition count, with stay locality kept for
+    downstream readers. The price is a write at most that many tasks
+    wide, each task holding one bucket's rows.
     """
     (
-        long_df.withColumn("stay_bucket", F.pmod(F.hash("stay_id"), F.lit(256)))
+        long_df.withColumn(
+            "stay_bucket", F.pmod(F.hash("stay_id"), F.lit(PARQUET_STAY_BUCKETS))
+        )
+        .repartition("stay_bucket")
         .write.mode("overwrite")
         .partitionBy("stay_bucket")
         .parquet(f"{dst_path}/{name}")

@@ -122,6 +122,12 @@ def test_full_run_sink_layout(spark, mimic_dir, tmp_path):
     assert len(pd.read_csv(f"{dst}/3/chartevents_features.csv")) == 0
     # stay 2 has no outputevents → header-only dummy there too
     assert len(pd.read_csv(f"{dst}/2/outputevents_features.csv")) == 0
+    # every file was renamed into place: no temp file is left behind
+    for sid in (1, 2, 3):
+        assert sorted(os.listdir(f"{dst}/{sid}")) == sorted(
+            f"{src}_features.csv"
+            for src in ("chartevents", "inputevents", "outputevents", "procedureevents")
+        )
 
 
 def test_csv_columns_resolved_by_name(spark, tmp_path):

@@ -139,6 +139,27 @@ def test_empty_stay_sink_is_anti_join(utc):
     assert "NestedLoop" not in s and "CartesianProduct" not in s
 
 
+def test_fused_csv_sink_one_parallel_grouped_writer(utc, mimic_dir, tmp_path):
+    """The CSV sink of all four sources is ONE grouped pandas writer fed
+    by ONE Exchange: an explicit hash repartition on stay_id to the
+    session's default parallelism, which AQE may not coalesce (a
+    coalesced sink runs the CPU-bound writer as one task)."""
+    from mimic2ts_spark.pipeline import EventsAggregator, tagged_long_form
+    from mimic2ts_spark.sinks import write_stay_matrices
+
+    aggs = EventsAggregator(utc, mimic_dir, str(tmp_path)).aggregators
+    assert len(aggs) == 4
+    names = tuple(a.name for a in aggs)
+    s = _plan(write_stay_matrices(tagged_long_form(aggs), str(tmp_path), names))
+    assert _count(r"\(\d+\) FlatMapGroupsInPandas", s) == 1, s
+    tree = s.split("\n\n")[0]
+    m = re.search(r"FlatMapGroupsInPandas \(\d+\)\n(?:.*\n)*?.*?\bExchange \((\d+)\)", tree)
+    assert m, tree
+    args = re.search(rf"\({m.group(1)}\) Exchange\n(?:.*\n)*?Arguments: (.*)", s).group(1)
+    n = utc.sparkContext.defaultParallelism
+    assert re.match(rf"hashpartitioning\(stay_id#\d+L, {n}\), REPARTITION_BY_NUM", args), args
+
+
 def test_bucketed_join_skips_shuffle(utc, tmp_path):
     """Pay the shuffle once at write time: two tables bucketed on the
     join key must equi-join with ZERO Exchange operators (co-located
