@@ -3,7 +3,8 @@ data-processing capabilities of isears/mimic2ts (reference at
 /root/reference, studied for behavior only; no code copied).
 
 Design stance (SURVEY.md §7): long-form DataFrame pipeline, zero row-wise
-UDFs, pivot only at the sink, broadcast dims, one shuffle per source.
+UDFs, pivot and grid fill only at the sink, broadcast dims, one
+map-side-combined aggregate shuffle for all sources of a CLI run.
 """
 
 from mimic2ts_spark.session import get_spark

@@ -9,10 +9,14 @@ long-form DataFrame plan (SURVEY.md §3.1 "Spark lifecycle equivalent"):
 The reference instead hash-shuffles on stay_id and runs nested Python
 group-applies per stay (/root/reference/src/mimic2ts/__init__.py:213-215);
 the flat agg removes the per-group memory cliff and lets AQE handle stay
-skew. Exactly one shuffle (the composite-key agg) per source; the stay dim
-is broadcast; everything is whole-stage-codegen'd. The enabled sources'
-plans are unioned into one tagged long form, so the CSV sink runs once
-per run for all of them (`write_csv_sink`).
+skew. `BaseAggregator.aggregate()` is that plan for one source: two
+shuffles (the composite-key agg and the dense reindex's per-series
+collect), three with `--ffill` (its window). The stay dim is broadcast.
+
+The CLI's CSV sink does not use the dense plan. `tagged_long_form`
+unions the enabled sources' events ahead of one bucketize and one
+composite-key agg, so a run shuffles its events once; the per-stay
+writer fills each stay's grid while it pivots (`write_csv_sink`).
 """
 
 from __future__ import annotations
@@ -54,6 +58,14 @@ def _bucketize(
     return bucketed.where(F.col("tidx") <= F.col("total_windows"))
 
 
+def _combine(combiner: str):  # Column
+    """The bucket value of one source: the mean of its `value`s, or
+    their sum with an all-NULL bucket counted as 0.0."""
+    if combiner == "avg":
+        return F.avg("value")
+    return F.coalesce(F.sum("value"), F.lit(0.0))
+
+
 def _aggregate_dense(
     bucketed: DataFrame, combiner: str, ffill: bool
 ) -> DataFrame:
@@ -65,11 +77,8 @@ def _aggregate_dense(
     agg and is zero-filled at the end (pandas `mean` of all-NaN is NaN,
     then fillna(0.0) — same terminal value).
     """
-    aggf = (
-        F.avg("value") if combiner == "avg" else F.coalesce(F.sum("value"), F.lit(0.0))
-    )
     agg = bucketed.groupBy("stay_id", "feature_id", "total_windows", "tidx").agg(
-        aggf.alias("value")
+        _combine(combiner).alias("value")
     )
     dense = dense_reindex(agg)
     if ffill:
@@ -139,14 +148,18 @@ class BaseAggregator:
         raise NotImplementedError
 
     # -- pipeline -----------------------------------------------------------
-    def aggregate(self) -> DataFrame:
-        """The full long-form plan (lazy; no action triggered)."""
-        ev = _apply_id_filters(self.events_long(), self.stay_ids, self.feature_ids)
-        bucketed = self._bucket(ev)
-        return _aggregate_dense(bucketed, self.combiner, self.ffill)
+    def filtered_events(self) -> DataFrame:
+        """`events_long()` with the stay and feature filters applied."""
+        return _apply_id_filters(self.events_long(), self.stay_ids, self.feature_ids)
 
-    def _bucket(self, ev: DataFrame) -> DataFrame:
-        return _bucketize(ev, self.requested_stays(), self.timestep_seconds)
+    def aggregate(self) -> DataFrame:
+        """The dense long-form plan `(stay_id, feature_id, tidx, value)`,
+        every tidx 0..total_windows present per (stay, feature) (lazy;
+        no action triggered)."""
+        bucketed = _bucketize(
+            self.filtered_events(), self.requested_stays(), self.timestep_seconds
+        )
+        return _aggregate_dense(bucketed, self.combiner, self.ffill)
 
     def do_agg(self) -> None:
         """Run the plan and write the per-stay wide CSV matrices (S3/S4)."""
@@ -257,19 +270,43 @@ class ProcedureEventAggregator(_IntervalAggregator):
 
 
 def tagged_long_form(aggregators: Sequence[BaseAggregator]) -> DataFrame:
-    """The sources' dense long forms as one lazy DataFrame
-    `(stay_id, feature_id, tidx, value, source)`, `source` being each
-    aggregator's name."""
-    return functools.reduce(
+    """The sources' SPARSE bucket aggregates as one lazy DataFrame
+    `(stay_id, source, feature_id, total_windows, tidx, value, ffill)`.
+
+    `source` is each aggregator's name. Only the observed buckets are
+    present: the gaps, and an all-NULL chartevents bucket (`value` NULL),
+    are filled by the writer (`sinks.write_stay_matrices`). Each row
+    carries its stay's `total_windows`, the writer's grid width, and its
+    source's fill policy as the constant `ffill`.
+
+    The sources' filtered events are unioned ahead of one bucketize and
+    one composite-key agg (avg for "avg" sources, else sum), so the
+    events are shuffled once, map-side combined. The aggregators must
+    share the requested stays and the timestep.
+    """
+    events = functools.reduce(
         DataFrame.unionByName,
-        [agg.aggregate().withColumn("source", F.lit(agg.name)) for agg in aggregators],
+        [agg.filtered_events().withColumn("source", F.lit(agg.name)) for agg in aggregators],
+    )
+    avg_sources = [agg.name for agg in aggregators if agg.combiner == "avg"]
+    ffill_sources = [agg.name for agg in aggregators if agg.ffill]
+    value = F.when(F.col("source").isin(avg_sources), _combine("avg")).otherwise(
+        _combine("sum")
+    )
+    first = aggregators[0]
+    return (
+        _bucketize(events, first.requested_stays(), first.timestep_seconds)
+        .groupBy("stay_id", "source", "feature_id", "total_windows", "tidx")
+        .agg(value.alias("value"))
+        .withColumn("ffill", F.col("source").isin(ffill_sources))
     )
 
 
 def write_csv_sink(aggregators: Sequence[BaseAggregator]) -> None:
     """Write every (stay, source) CSV of the given aggregators (S3/S4):
-    one grouped writer over their tagged long form and one empty-stay
-    pass. The aggregators share dst_path and the requested stays."""
+    one grouped writer over their tagged sparse aggregate and one
+    empty-stay pass. The aggregators share dst_path, the requested stays
+    and the timestep."""
     first = aggregators[0]
     names = tuple(agg.name for agg in aggregators)
     produced = write_stay_matrices(tagged_long_form(aggregators), first.dst_path, names)

@@ -9,11 +9,13 @@ pandas escape hatch (`groupBy(stay_id).applyInPandas`), as planned in
 SURVEY.md §4 "Sink layout". Everything upstream stays native.
 
 The CSV sink is one pass per run for every enabled source: the sources'
-long forms arrive as one DataFrame tagged with a `source` column, one
-pandas group per stay writes all of that stay's files, and one Arrow
-(`mapInPandas`) pass writes the header-only files of event-less stays.
-Each file is written under a temp name and renamed into place, so a
-killed or retried task never leaves a truncated CSV.
+sparse bucket aggregates arrive as one DataFrame tagged with a `source`
+column, one pandas group per stay builds and writes all of that stay's
+grids (pivot, reindex to 0..total_windows, ffill, zero-fill), and one
+Arrow (`mapInPandas`) pass writes the header-only files of event-less
+stays. Each file, and the run manifest, is written under a temp name and
+renamed into place, so a killed or retried task never leaves a truncated
+file.
 
 For engine-native output (the recommended path at scale), use
 `write_long_parquet`: partitioned parquet with Spark's commit protocol —
@@ -32,17 +34,18 @@ from pyspark.sql import functions as F
 PARQUET_STAY_BUCKETS = 256
 
 
-def _replace_csv(frame: pd.DataFrame, path: str, **to_csv) -> None:
-    """Write `frame` as CSV to a hidden temp name beside `path`, then
+def _replace_file(path: str, write) -> None:
+    """Call `write(tmp)` on a hidden temp name beside `path`, then
     rename it over `path` (atomic on POSIX).
 
-    A task killed mid-write, or a speculative duplicate, leaves at most
-    the temp file (the pid keeps concurrent writers apart), never a
-    truncated CSV under the final name."""
+    A process killed mid-write, or a speculative duplicate task, leaves
+    at most the temp file (the pid keeps concurrent writers apart), never
+    a truncated file under the final name; a write that raises removes
+    its temp file."""
     head, tail = os.path.split(path)
     tmp = os.path.join(head, f".{tail}.{os.getpid()}.tmp")
     try:
-        frame.to_csv(tmp, **to_csv)
+        write(tmp)
         os.replace(tmp, path)
     except BaseException:
         if os.path.exists(tmp):
@@ -50,9 +53,27 @@ def _replace_csv(frame: pd.DataFrame, path: str, **to_csv) -> None:
         raise
 
 
+def _replace_csv(frame: pd.DataFrame, path: str, **to_csv) -> None:
+    """Write `frame` as CSV to `path` through `_replace_file`."""
+    _replace_file(path, lambda tmp: frame.to_csv(tmp, **to_csv))
+
+
 def _write_header_only(path: str, total_windows: int) -> None:
     cols = ["feature_id", *range(total_windows + 1)]
     _replace_csv(pd.DataFrame(columns=cols), path, index=False)
+
+
+def _stay_grid(rows: pd.DataFrame, total_windows: int) -> pd.DataFrame:
+    """One source's wide matrix for one stay from its sparse bucket rows:
+    features (ascending) × buckets 0..total_windows. Gaps and NULL
+    buckets are forward-filled along the row when the rows' `ffill` is
+    set, then zero-filled, as the reference does per stay
+    (src/mimic2ts/__init__.py:124-136)."""
+    wide = rows.pivot(index="feature_id", columns="tidx", values="value")
+    wide = wide.reindex(columns=range(total_windows + 1)).sort_index()
+    if rows["ffill"].iat[0]:
+        wide = wide.ffill(axis=1)
+    return wide.fillna(0.0)
 
 
 def write_stay_matrices(
@@ -61,19 +82,22 @@ def write_stay_matrices(
     """Pivot per stay and write `{dst}/{stay_id}/{name}_features.csv`
     for every source in `names`.
 
-    Input is the dense long form of all those sources
-    `(stay_id, feature_id, tidx, value, source)`: every tidx
-    0..total_windows present per (stay, source, feature). Output layout
-    parity with the reference README: rows indexed by feature_id
-    (ascending), columns `feature_id, 0..total_windows`. A source with
-    no rows for a stay gets a header-only file; the dense reindex makes
-    the stay's max tidx its total_windows.
+    Input is the SPARSE bucket aggregate of all those sources
+    `(stay_id, source, feature_id, total_windows, tidx, value, ffill)`
+    (`pipeline.tagged_long_form`): only observed buckets, each row
+    carrying its stay's `total_windows` and its source's constant
+    `ffill`. The writer builds each stay's grid: it pivots the rows,
+    reindexes the columns to 0..total_windows, forward-fills along the
+    row if `ffill`, then zero-fills. Output layout parity with the
+    reference README: rows indexed by feature_id (ascending), columns
+    `feature_id, 0..total_windows`. A source with no rows for a stay
+    gets a header-only file.
 
     The rows are hash-partitioned on stay_id to the session's default
     parallelism before the grouping (which reuses that partitioning, so
-    there is one Exchange): AQE may coalesce a shuffle it sized itself,
-    and the small long form would otherwise run this CPU-bound writer
-    as a single task.
+    the writer adds one Exchange): AQE may coalesce a shuffle it sized
+    itself, and the small aggregate would otherwise run this CPU-bound
+    writer as a single task.
 
     Returns the LAZY produced-stays DataFrame `(stay_id, n_features)` —
     the files are written executor-side when a downstream action runs it
@@ -86,7 +110,7 @@ def write_stay_matrices(
 
     def _write(pdf: pd.DataFrame) -> pd.DataFrame:
         stay_id = int(pdf["stay_id"].iloc[0])
-        total_windows = int(pdf["tidx"].max())
+        total_windows = int(pdf["total_windows"].iat[0])
         by_source = dict(iter(pdf.groupby("source", sort=False)))
         os.makedirs(f"{dst_path}/{stay_id}", exist_ok=True)
         n_features = 0
@@ -96,8 +120,7 @@ def write_stay_matrices(
             if rows is None:
                 _write_header_only(path, total_windows)
                 continue
-            wide = rows.pivot(index="feature_id", columns="tidx", values="value")
-            wide = wide.reindex(sorted(wide.columns), axis=1).sort_index()
+            wide = _stay_grid(rows, total_windows)
             _replace_csv(wide, path)
             n_features += wide.shape[0]
         return pd.DataFrame({"stay_id": [stay_id], "n_features": [n_features]})
@@ -175,10 +198,17 @@ def write_long_parquet(long_df: DataFrame, dst_path: str, name: str) -> None:
 
 
 def write_manifest(dst_path: str, version: str, runtime_seconds: float, args: dict) -> None:
-    """Run manifest (S5 — /root/reference/src/mimic2ts/__main__.py:83-91)."""
+    """Run manifest (S5 — the reference's src/mimic2ts/__main__.py:83-91).
+
+    `readme.txt` marks a completed run, so it is written to a temp name
+    and renamed into place: it is either whole or absent."""
     os.makedirs(dst_path, exist_ok=True)
-    with open(f"{dst_path}/readme.txt", "w") as f:
-        f.write(f"mimic2ts_spark version: {version}\n")
-        f.write(f"runtime seconds: {runtime_seconds}\n")
-        for k, v in args.items():
-            f.write(f"{k}: {v}\n")
+
+    def _write(tmp: str) -> None:
+        with open(tmp, "w") as f:
+            f.write(f"mimic2ts_spark version: {version}\n")
+            f.write(f"runtime seconds: {runtime_seconds}\n")
+            for k, v in args.items():
+                f.write(f"{k}: {v}\n")
+
+    _replace_file(f"{dst_path}/readme.txt", _write)

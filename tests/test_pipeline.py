@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -128,6 +129,58 @@ def test_full_run_sink_layout(spark, mimic_dir, tmp_path):
             f"{src}_features.csv"
             for src in ("chartevents", "inputevents", "outputevents", "procedureevents")
         )
+
+
+@pytest.fixture(scope="module")
+def gap_mimic_dir(mimic_dir, tmp_path_factory) -> str:
+    """The shared fixture plus stay 1, itemid 102: 5.0 in bucket 0, a
+    bucket 1 whose valuenums are all NULL, a gap at buckets 2-3, 9.0 in
+    bucket 4 and a trailing gap at bucket 5."""
+    root = tmp_path_factory.mktemp("gap_mimic")
+    shutil.copytree(f"{mimic_dir}/icu", root / "icu")
+    chart = pd.read_csv(root / "icu" / "chartevents.csv")
+    extra = pd.DataFrame(
+        {
+            "charttime": ["2024-01-01 00:10:00", "2024-01-01 01:10:00",
+                          "2024-01-01 01:50:00", "2024-01-01 04:10:00"],
+            "valuenum": [5.0, None, None, 9.0],
+        }
+    ).assign(subject_id=11, hadm_id=21, stay_id=1, storetime="2024-01-01 00:30:00",
+             itemid=102, value="", valueuom="bpm", warning="")
+    pd.concat([chart, extra[chart.columns]]).to_csv(root / "icu" / "chartevents.csv",
+                                                   index=False)
+    return str(root)
+
+
+@pytest.mark.parametrize("ffill", [False, True])
+def test_csv_sink_equals_dense_aggregate_pivoted(spark, gap_mimic_dir, tmp_path, ffill):
+    """The CSV sink builds each stay's grid from the sparse bucket
+    aggregate; every (stay, source) file must be byte-equal to that
+    source's dense `aggregate()` pivoted (the reference for the sink),
+    header-only where the source has no rows for the stay."""
+    dst = str(tmp_path / "out")
+    events = EventsAggregator(spark, gap_mimic_dir, dst, ffill=ffill)
+    events.do_agg()
+    widths = {r.stay_id: r.total_windows for r in events.aggregators[0].stays().collect()}
+    for agg in events.aggregators:
+        dense = agg.aggregate().toPandas()
+        for sid, total_windows in widths.items():
+            rows = dense[dense["stay_id"] == sid]
+            if len(rows):
+                wide = rows.pivot(index="feature_id", columns="tidx", values="value")
+                assert list(wide.columns) == list(range(total_windows + 1))
+                expected = wide.sort_index().to_csv()
+            else:
+                cols = ["feature_id", *range(total_windows + 1)]
+                expected = pd.DataFrame(columns=cols).to_csv(index=False)
+            with open(f"{dst}/{sid}/{agg.name}_features.csv") as f:
+                assert f.read() == expected, (sid, agg.name)
+
+    chart1 = pd.read_csv(f"{dst}/1/chartevents_features.csv").set_index("feature_id")
+    # the all-NULL bucket 1 and the gap at 2-3 take the carried 5.0 with
+    # ffill, else 0.0; ffill carries 9.0 into the trailing gap
+    filled = [5.0, 5.0, 5.0, 5.0, 9.0, 9.0] if ffill else [5.0, 0.0, 0.0, 0.0, 9.0, 0.0]
+    assert chart1.loc[102].tolist() == filled
 
 
 def test_csv_columns_resolved_by_name(spark, tmp_path):

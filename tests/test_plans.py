@@ -141,23 +141,38 @@ def test_empty_stay_sink_is_anti_join(utc):
 
 def test_fused_csv_sink_one_parallel_grouped_writer(utc, mimic_dir, tmp_path):
     """The CSV sink of all four sources is ONE grouped pandas writer fed
-    by ONE Exchange: an explicit hash repartition on stay_id to the
-    session's default parallelism, which AQE may not coalesce (a
-    coalesced sink runs the CPU-bound writer as one task)."""
+    by ONE sparse bucket aggregate, with or without ffill (the writer
+    fills each stay's grid). Exactly two hash Exchanges: the composite-key
+    aggregate's, and an explicit hash repartition on stay_id to the
+    session's default parallelism under the writer, which AQE may not
+    coalesce (a coalesced sink runs the CPU-bound writer as one task).
+    One broadcast stay dim, and no dense-grid machinery: no
+    ObjectHashAggregate (collect_list series) and no Window (ffill)."""
     from mimic2ts_spark.pipeline import EventsAggregator, tagged_long_form
     from mimic2ts_spark.sinks import write_stay_matrices
 
-    aggs = EventsAggregator(utc, mimic_dir, str(tmp_path)).aggregators
-    assert len(aggs) == 4
-    names = tuple(a.name for a in aggs)
-    s = _plan(write_stay_matrices(tagged_long_form(aggs), str(tmp_path), names))
-    assert _count(r"\(\d+\) FlatMapGroupsInPandas", s) == 1, s
-    tree = s.split("\n\n")[0]
-    m = re.search(r"FlatMapGroupsInPandas \(\d+\)\n(?:.*\n)*?.*?\bExchange \((\d+)\)", tree)
-    assert m, tree
-    args = re.search(rf"\({m.group(1)}\) Exchange\n(?:.*\n)*?Arguments: (.*)", s).group(1)
     n = utc.sparkContext.defaultParallelism
-    assert re.match(rf"hashpartitioning\(stay_id#\d+L, {n}\), REPARTITION_BY_NUM", args), args
+    for ffill in (False, True):
+        aggs = EventsAggregator(utc, mimic_dir, str(tmp_path), ffill=ffill).aggregators
+        assert len(aggs) == 4
+        names = tuple(a.name for a in aggs)
+        s = _plan(write_stay_matrices(tagged_long_form(aggs), str(tmp_path), names))
+        assert _count(r"\(\d+\) FlatMapGroupsInPandas", s) == 1, s
+        assert _count(r"\(\d+\) BroadcastExchange", s) == 1, s
+        assert _count(r"\(\d+\) ObjectHashAggregate", s) == 0, s
+        assert _count(r"\(\d+\) Window", s) == 0, s
+        exchanges = re.findall(r"\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)", s)
+        assert len(exchanges) == 2, s
+        assert any(
+            re.match(r"hashpartitioning\(stay_id#\d+L, source#\d+, feature_id#\d+L, "
+                     r"total_windows#\d+L, tidx#\d+L, \d+\), ENSURE_REQUIREMENTS", a)
+            for a in exchanges
+        ), exchanges
+        tree = s.split("\n\n")[0]
+        m = re.search(r"FlatMapGroupsInPandas \(\d+\)\n(?:.*\n)*?.*?\bExchange \((\d+)\)", tree)
+        assert m, tree
+        args = re.search(rf"\({m.group(1)}\) Exchange\n(?:.*\n)*?Arguments: (.*)", s).group(1)
+        assert re.match(rf"hashpartitioning\(stay_id#\d+L, {n}\), REPARTITION_BY_NUM", args), args
 
 
 def test_bucketed_join_skips_shuffle(utc, tmp_path):

@@ -1,5 +1,6 @@
-"""Sink robustness: per-stay CSVs are replaced atomically, and the
-long-form parquet sink writes one file per stay bucket."""
+"""Sink robustness: per-stay CSVs and the run manifest are replaced
+atomically, and the long-form parquet sink writes one file per stay
+bucket."""
 
 from __future__ import annotations
 
@@ -33,6 +34,29 @@ def test_failed_csv_write_leaves_no_truncated_file(tmp_path, monkeypatch, previo
     else:
         assert os.listdir(tmp_path) == [path.name]
         assert path.read_text() == previous
+
+
+class _Unprintable:
+    def __str__(self):
+        raise OSError("disk full")
+
+
+@pytest.mark.parametrize("previous", [None, "mimic2ts_spark version: 0.1\n"])
+def test_failed_manifest_write_leaves_no_truncated_readme(tmp_path, previous):
+    """`readme.txt` marks a completed run: a write that dies after its
+    first lines leaves the earlier manifest (or none) and no temp file."""
+    path = tmp_path / "readme.txt"
+    if previous is not None:
+        path.write_text(previous)
+    with pytest.raises(OSError, match="disk full"):
+        sinks.write_manifest(str(tmp_path), "0.3.0", 1.5, {"src": "x", "dst": _Unprintable()})
+    if previous is None:
+        assert os.listdir(tmp_path) == []
+    else:
+        assert os.listdir(tmp_path) == [path.name]
+        assert path.read_text() == previous
+    sinks.write_manifest(str(tmp_path), "0.3.0", 1.5, {"src": "x"})
+    assert path.read_text() == "mimic2ts_spark version: 0.3.0\nruntime seconds: 1.5\nsrc: x\n"
 
 
 def test_long_parquet_one_file_per_stay_bucket(spark, tmp_path):
