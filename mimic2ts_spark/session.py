@@ -26,8 +26,10 @@ def get_spark(
     - UTC session timezone (oracle comparisons and epoch math are
       timezone-free, mirroring the reference's naive-UTC epoch seconds,
       /root/reference/src/mimic2ts/__init__.py:84-87).
-    - Arrow enabled for the few pandas-UDF boundaries (grouped CSV sink,
-      multimodal decode).
+    - Arrow enabled for DataFrame <-> pandas conversion (`toPandas`,
+      `createDataFrame`). The Python UDF boundaries (the CSV sink's Arrow
+      grouped writer + numpy grid, multimodal decode) exchange Arrow
+      batches regardless.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:

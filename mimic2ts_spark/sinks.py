@@ -5,17 +5,19 @@ inside each stay-group task (/root/reference/src/mimic2ts/__init__.py:174)
 and a header-only dummy for event-less stays (:217-225). Exact-layout
 parity needs per-stay pivoted files with data-dependent width, which no
 declarative Spark sink produces — so this is the engine's ONE grouped
-pandas escape hatch (`groupBy(stay_id).applyInPandas`), as planned in
-SURVEY.md §4 "Sink layout". Everything upstream stays native.
+Python writer (`groupBy(stay_id).applyInArrow`), as planned in SURVEY.md
+§4 "Sink layout". Everything upstream stays native.
 
 The CSV sink is one pass per run for every enabled source: the sources'
 sparse bucket aggregates arrive as one DataFrame tagged with a `source`
-column, one pandas group per stay builds and writes all of that stay's
-grids (pivot, reindex to 0..total_windows, ffill, zero-fill), and one
-Arrow (`mapInPandas`) pass writes the header-only files of event-less
-stays. Each file, and the run manifest, is written under a temp name and
+column, and an Arrow grouped writer with a numpy grid kernel builds and
+writes each stay's grids (scatter into features × 0..total_windows,
+ffill, zero-fill), formatting them as pandas' `to_csv` does. One
+`mapInArrow` pass writes the header-only files of event-less stays.
+Each file, and the run manifest, is written under a temp name and
 renamed into place, so a killed or retried task never leaves a truncated
-file.
+file. The module imports no pandas, so a Python worker that unpickles
+the writer loads neither pandas nor the pipeline.
 
 For engine-native output (the recommended path at scale), use
 `write_long_parquet`: partitioned parquet with Spark's commit protocol —
@@ -25,27 +27,31 @@ retry-safe, unlike the reference's in-task writes.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Iterable, Iterator, Sequence
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PARQUET_STAY_BUCKETS = 256
+# cells per formatted chunk of a CSV, as in pandas' to_csv
+_CHUNK_CELLS = 100_000
 
 
-def _replace_file(path: str, write) -> None:
-    """Call `write(tmp)` on a hidden temp name beside `path`, then
-    rename it over `path` (atomic on POSIX).
+def _replace_file(path: str, chunks: Iterable[str]) -> None:
+    """Write the text `chunks`, in order, to a hidden temp name beside
+    `path`, then rename it over `path` (atomic on POSIX).
 
     A process killed mid-write, or a speculative duplicate task, leaves
     at most the temp file (the pid keeps concurrent writers apart), never
-    a truncated file under the final name; a write that raises removes
-    its temp file."""
+    a truncated file under the final name; a write that raises (the
+    chunks may be produced lazily, mid-file) removes its temp file."""
     head, tail = os.path.split(path)
     tmp = os.path.join(head, f".{tail}.{os.getpid()}.tmp")
     try:
-        write(tmp)
+        with open(tmp, "w") as f:
+            f.writelines(chunks)
         os.replace(tmp, path)
     except BaseException:
         if os.path.exists(tmp):
@@ -53,27 +59,93 @@ def _replace_file(path: str, write) -> None:
         raise
 
 
-def _replace_csv(frame: pd.DataFrame, path: str, **to_csv) -> None:
-    """Write `frame` as CSV to `path` through `_replace_file`."""
-    _replace_file(path, lambda tmp: frame.to_csv(tmp, **to_csv))
+def _header(total_windows: int) -> str:
+    return ",".join(["feature_id", *map(str, range(total_windows + 1))]) + "\n"
 
 
-def _write_header_only(path: str, total_windows: int) -> None:
-    cols = ["feature_id", *range(total_windows + 1)]
-    _replace_csv(pd.DataFrame(columns=cols), path, index=False)
-
-
-def _stay_grid(rows: pd.DataFrame, total_windows: int) -> pd.DataFrame:
+def _stay_grid(
+    feature_id: np.ndarray,
+    tidx: np.ndarray,
+    value: np.ndarray,
+    total_windows: int,
+    ffill: bool,
+) -> tuple[np.ndarray, np.ndarray]:
     """One source's wide matrix for one stay from its sparse bucket rows:
-    features (ascending) × buckets 0..total_windows. Gaps and NULL
-    buckets are forward-filled along the row when the rows' `ffill` is
-    set, then zero-filled, as the reference does per stay
+    `(features, grid)`, the distinct feature ids ascending and a
+    `features × (total_windows + 1)` float grid. Each row's gaps and
+    NULL (NaN) buckets are forward-filled along the row when `ffill`,
+    then zero-filled, as the reference does per stay
     (src/mimic2ts/__init__.py:124-136)."""
-    wide = rows.pivot(index="feature_id", columns="tidx", values="value")
-    wide = wide.reindex(columns=range(total_windows + 1)).sort_index()
-    if rows["ffill"].iat[0]:
-        wide = wide.ffill(axis=1)
-    return wide.fillna(0.0)
+    features, row = np.unique(feature_id, return_inverse=True)
+    grid = np.full((len(features), total_windows + 1), np.nan)
+    grid[row, tidx] = value
+    if ffill:
+        # per cell, the column of the last valid cell at or before it
+        last = np.where(np.isnan(grid), 0, np.arange(total_windows + 1))
+        grid = np.take_along_axis(grid, np.maximum.accumulate(last, axis=1), axis=1)
+    grid[np.isnan(grid)] = 0.0
+    return features, grid
+
+
+def _csv_chunks(features: np.ndarray, grid: np.ndarray) -> Iterator[str]:
+    """The CSV text of a stay grid: the header `feature_id,0..total_windows`,
+    then one line per feature, formatted in chunks of at most
+    `_CHUNK_CELLS` cells.
+
+    Values are formatted by `ndarray.astype(str)`, the conversion pandas'
+    `to_csv` applies to float blocks (shortest round-trip repr: `0.0`,
+    `-0.0`, `1e-05`, `inf`), so the text equals pandas' `to_csv` of the
+    same grid indexed by `feature_id`."""
+    yield _header(grid.shape[1] - 1)
+    step = max(1, _CHUNK_CELLS // grid.shape[1])
+    for start in range(0, len(features), step):
+        ids = features[start:start + step].tolist()
+        cells = grid[start:start + step].astype(str).tolist()
+        yield "".join(f"{fid},{','.join(row)}\n" for fid, row in zip(ids, cells))
+
+
+def _numpy(column: pa.ChunkedArray, dtype: type) -> np.ndarray:
+    """A fixed-width numeric Arrow column as a numpy array, NULL as NaN.
+
+    Read from the Arrow buffers: pyarrow's `to_numpy` (and any Python to
+    Arrow conversion) imports pandas, which cost each writer task 0.3-0.5 s
+    before its first stay on a 4-core x86 host."""
+    arr = column.combine_chunks()
+    validity, data = arr.buffers()
+    end = arr.offset + len(arr)
+    values = np.frombuffer(data, dtype, count=end)[arr.offset:]
+    if arr.null_count:
+        bits = np.frombuffer(validity, np.uint8, count=(end + 7) // 8)
+        valid = np.unpackbits(bits, count=end, bitorder="little")[arr.offset:]
+        values = np.where(valid == 1, values, np.nan)
+    return values
+
+
+def _write_stay(table: pa.Table, dst_path: str, names: Sequence[str]) -> pa.Table:
+    """Write every source's CSV of one stay from its sparse rows (the
+    grouped writer's body, see `write_stay_matrices`); returns the
+    one-row `(stay_id, n_features)` table."""
+    stay_id = table.column("stay_id")[0].as_py()
+    total_windows = table.column("total_windows")[0].as_py()
+    source = np.array(table.column("source").to_pylist())
+    ffill = np.array(table.column("ffill").to_pylist())
+    feature_id = _numpy(table.column("feature_id"), np.int64)
+    tidx = _numpy(table.column("tidx"), np.int64)
+    value = _numpy(table.column("value"), np.float64)
+    os.makedirs(f"{dst_path}/{stay_id}", exist_ok=True)
+    n_features = 0
+    for name in names:
+        rows = source == name
+        features, grid = _stay_grid(
+            feature_id[rows], tidx[rows], value[rows], total_windows, ffill[rows].any()
+        )
+        _replace_file(f"{dst_path}/{stay_id}/{name}_features.csv", _csv_chunks(features, grid))
+        n_features += len(features)
+    counts = pa.py_buffer(np.array([n_features], np.int64))
+    return pa.Table.from_arrays(
+        [table.column("stay_id").slice(0, 1), pa.Array.from_buffers(pa.int64(), 1, [None, counts])],
+        names=["stay_id", "n_features"],
+    )
 
 
 def write_stay_matrices(
@@ -86,12 +158,13 @@ def write_stay_matrices(
     `(stay_id, source, feature_id, total_windows, tidx, value, ffill)`
     (`pipeline.tagged_long_form`): only observed buckets, each row
     carrying its stay's `total_windows` and its source's constant
-    `ffill`. The writer builds each stay's grid: it pivots the rows,
-    reindexes the columns to 0..total_windows, forward-fills along the
-    row if `ffill`, then zero-fills. Output layout parity with the
-    reference README: rows indexed by feature_id (ascending), columns
-    `feature_id, 0..total_windows`. A source with no rows for a stay
-    gets a header-only file.
+    `ffill`. An Arrow grouped writer (`applyInArrow`) gets each stay's
+    rows as one Arrow table and builds every source's grid in numpy
+    (`_stay_grid`): it scatters the rows into a features × 0..total_windows
+    grid, forward-fills along the row if `ffill`, then zero-fills.
+    Output layout parity with the reference README: rows indexed by
+    feature_id (ascending), columns `feature_id, 0..total_windows`. A
+    source with no rows for a stay gets a header-only file.
 
     The rows are hash-partitioned on stay_id to the session's default
     parallelism before the grouping (which reuses that partitioning, so
@@ -108,27 +181,13 @@ def write_stay_matrices(
     """
     parts = long_df.sparkSession.sparkContext.defaultParallelism
 
-    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-        stay_id = int(pdf["stay_id"].iloc[0])
-        total_windows = int(pdf["total_windows"].iat[0])
-        by_source = dict(iter(pdf.groupby("source", sort=False)))
-        os.makedirs(f"{dst_path}/{stay_id}", exist_ok=True)
-        n_features = 0
-        for name in names:
-            path = f"{dst_path}/{stay_id}/{name}_features.csv"
-            rows = by_source.get(name)
-            if rows is None:
-                _write_header_only(path, total_windows)
-                continue
-            wide = _stay_grid(rows, total_windows)
-            _replace_csv(wide, path)
-            n_features += wide.shape[0]
-        return pd.DataFrame({"stay_id": [stay_id], "n_features": [n_features]})
+    def _write(table):
+        return _write_stay(table, dst_path, names)
 
     return (
         long_df.repartition(parts, "stay_id")
         .groupBy("stay_id")
-        .applyInPandas(_write, schema="stay_id long, n_features long")
+        .applyInArrow(_write, schema="stay_id long, n_features long")
     )
 
 
@@ -148,27 +207,29 @@ def write_empty_stay_files(
     names: Sequence[str],
 ) -> None:
     """Header-only CSV of every source in `names` for every requested
-    stay with no events (S4), written executor-side by one Arrow
-    `mapInPandas` pass into a `noop` sink.
+    stay with no events (S4), written executor-side by one `mapInArrow`
+    pass into a `noop` sink.
 
-    Triggering this action also executes the `produced` applyInPandas
-    subtree (the per-stay matrix writes) exactly once — one job drives
-    the whole sink. Empty-file writes are idempotent (fixed content per
-    stay), so task retries are safe.
+    Triggering this action also executes the `produced` Arrow grouped
+    writer subtree (the per-stay matrix writes) exactly once — one job
+    drives the whole sink. Empty-file writes are idempotent (fixed
+    content per stay), so task retries are safe.
     """
 
     def _write(batches):
         for batch in batches:
-            for sid, total_windows in zip(batch["stay_id"], batch["total_windows"]):
+            stays = zip(batch.column("stay_id").to_pylist(),
+                        batch.column("total_windows").to_pylist())
+            for sid, total_windows in stays:
                 os.makedirs(f"{dst_path}/{sid}", exist_ok=True)
+                header = _header(total_windows)
                 for name in names:
-                    _write_header_only(f"{dst_path}/{sid}/{name}_features.csv",
-                                       int(total_windows))
-            yield batch[["stay_id"]]
+                    _replace_file(f"{dst_path}/{sid}/{name}_features.csv", [header])
+            yield batch.select(["stay_id"])
 
     (
         missing_stays(requested_stays, produced)
-        .mapInPandas(_write, schema="stay_id long")
+        .mapInArrow(_write, schema="stay_id long")
         .write.format("noop")
         .mode("overwrite")
         .save()
@@ -203,12 +264,6 @@ def write_manifest(dst_path: str, version: str, runtime_seconds: float, args: di
     `readme.txt` marks a completed run, so it is written to a temp name
     and renamed into place: it is either whole or absent."""
     os.makedirs(dst_path, exist_ok=True)
-
-    def _write(tmp: str) -> None:
-        with open(tmp, "w") as f:
-            f.write(f"mimic2ts_spark version: {version}\n")
-            f.write(f"runtime seconds: {runtime_seconds}\n")
-            for k, v in args.items():
-                f.write(f"{k}: {v}\n")
-
-    _replace_file(f"{dst_path}/readme.txt", _write)
+    fields = [("mimic2ts_spark version", version), ("runtime seconds", runtime_seconds),
+              *args.items()]
+    _replace_file(f"{dst_path}/readme.txt", (f"{k}: {v}\n" for k, v in fields))

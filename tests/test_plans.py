@@ -140,7 +140,7 @@ def test_empty_stay_sink_is_anti_join(utc):
 
 
 def test_fused_csv_sink_one_parallel_grouped_writer(utc, mimic_dir, tmp_path):
-    """The CSV sink of all four sources is ONE grouped pandas writer fed
+    """The CSV sink of all four sources is ONE Arrow grouped writer fed
     by ONE sparse bucket aggregate, with or without ffill (the writer
     fills each stay's grid). Exactly two hash Exchanges: the composite-key
     aggregate's, and an explicit hash repartition on stay_id to the
@@ -157,7 +157,7 @@ def test_fused_csv_sink_one_parallel_grouped_writer(utc, mimic_dir, tmp_path):
         assert len(aggs) == 4
         names = tuple(a.name for a in aggs)
         s = _plan(write_stay_matrices(tagged_long_form(aggs), str(tmp_path), names))
-        assert _count(r"\(\d+\) FlatMapGroupsInPandas", s) == 1, s
+        assert _count(r"\(\d+\) FlatMapGroupsInArrow", s) == 1, s
         assert _count(r"\(\d+\) BroadcastExchange", s) == 1, s
         assert _count(r"\(\d+\) ObjectHashAggregate", s) == 0, s
         assert _count(r"\(\d+\) Window", s) == 0, s
@@ -169,7 +169,7 @@ def test_fused_csv_sink_one_parallel_grouped_writer(utc, mimic_dir, tmp_path):
             for a in exchanges
         ), exchanges
         tree = s.split("\n\n")[0]
-        m = re.search(r"FlatMapGroupsInPandas \(\d+\)\n(?:.*\n)*?.*?\bExchange \((\d+)\)", tree)
+        m = re.search(r"FlatMapGroupsInArrow \(\d+\)\n(?:.*\n)*?.*?\bExchange \((\d+)\)", tree)
         assert m, tree
         args = re.search(rf"\({m.group(1)}\) Exchange\n(?:.*\n)*?Arguments: (.*)", s).group(1)
         assert re.match(rf"hashpartitioning\(stay_id#\d+L, {n}\), REPARTITION_BY_NUM", args), args
