@@ -356,9 +356,9 @@ def _ab_notes() -> dict:
 def _memo_build_seconds() -> dict:
     """Telemetry must never fail the bench."""
     try:
-        from mimic2ts_spark.harness_ext import MEMO_BUILD_SECONDS
+        from mimic2ts_spark.memo import BUILD_SECONDS
 
-        return dict(MEMO_BUILD_SECONDS)
+        return dict(BUILD_SECONDS)
     except Exception:
         return {}
 

@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mimic2ts_spark import memo
 from mimic2ts_spark.session import session_tmpdir
 
 from mimic2ts_spark.operators.dense import dense_reindex, forward_fill, zero_fill
@@ -43,32 +44,22 @@ H = 3600
 SCALE = 100  # testdata carries 2-decimal values/prices
 
 
-_T_MEMO: dict = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet loader. The testdata `events.ts` column is physical
-    TIMESTAMP(NANOS), which vanilla Spark rejects (PARQUET_TYPE_ILLEGAL):
-    read it as raw nanos and rebuild a microsecond timestamp — integer
-    `div` keeps full precision (ns values overflow double's 2^53), and
-    µs truncation matches how DuckDB reads the same file, so oracles
-    agree on every derived time value.
+    """Parquet loader, memoized per (session, file content) by
+    memo.plan (a lazy plan only; no data is cached)."""
+    return memo.plan(spark, f"{sf_dir}/{name}.parquet", _read_t)
 
-    Resolution is MEMOIZED per (session, file content) — sources.
-    memo_read_parquet plus a local memo for the events ts rebuild (the
-    dtypes probe costs an analysis pass per call). A lazy plan only;
-    no data is cached (r15, VERDICT r14 #1 pre-resolved reads)."""
-    from mimic2ts_spark.sources import _file_fingerprint, memo_read_parquet
 
-    path = f"{sf_dir}/{name}.parquet"
-    key = (spark, path, _file_fingerprint(path))
-    got = _T_MEMO.get(key)
-    if got is not None:
-        return got
-    df = memo_read_parquet(spark, path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+def _read_t(spark: SparkSession, path: str) -> DataFrame:
+    """The testdata `events.ts` column is physical TIMESTAMP(NANOS),
+    which vanilla Spark rejects (PARQUET_TYPE_ILLEGAL): read it as raw
+    nanos and rebuild a microsecond timestamp — integer `div` keeps full
+    precision (ns values overflow double's 2^53), and µs truncation
+    matches how DuckDB reads the same file, so oracles agree on every
+    derived time value."""
+    df = memo.read_parquet(spark, path)
+    if path.endswith("/events.parquet") and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _T_MEMO[key] = df
     return df
 
 
@@ -2284,7 +2275,7 @@ _GATE_CHANGED_THIS_ROUND = [
     # r15 no-slot changes, value-identical by construction and re-proven
     # by the committed full local sweep LOCAL_CORRECTNESS_r15.json (the
     # r10 safe-drop rule):
-    # - memoized source-read resolution (sources.memo_read_parquet /
+    # - memoized source-read resolution (today memo.read_parquet /
     #   harness._t / harness_ext._spread_src and the artifact-loader
     #   reads): identical lazy plans, resolved once per (session, file
     #   content) — no plan or value change anywhere;

@@ -7,8 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mimic2ts_spark import memo
 from mimic2ts_spark.session import session_tmpdir
-from mimic2ts_spark.sources import memo_read_parquet as _mrp
 
 from mimic2ts_spark.operators import dedup as D
 from mimic2ts_spark.operators import multimodal as _mm
@@ -26,24 +26,18 @@ def _sql_sub(sql: str, old: str, new: str, count: int = -1) -> str:
     return sql.replace(old, new, count)
 
 
-# Memoized per (session, file content): ensure_parallelism costs an
-# optimizer pass + an RDD partition probe per call (~80-110 ms measured
-# r15), and its decision is deterministic for a fixed file and session —
-# so the resolved, spread plan is computed once per process (a lazy plan
-# only; no data cached — VERDICT r14 #1 pre-resolved reads).
-_SRC_MEMO: dict = {}
-
-
 def _spread_src(spark, path):
-    from mimic2ts_spark.operators.spread import ensure_parallelism
-    from mimic2ts_spark.sources import _file_fingerprint, memo_read_parquet
+    """The resolved, spread read of `path`. Memoized per (session, file
+    content): ensure_parallelism costs an optimizer pass and an RDD
+    partition probe per call, and its decision is fixed for a fixed
+    file and session."""
+    return memo.plan(spark, path, _spread)
 
-    key = (spark, path, _file_fingerprint(path))
-    df = _SRC_MEMO.get(key)
-    if df is None:
-        df = ensure_parallelism(memo_read_parquet(spark, path))
-        _SRC_MEMO[key] = df
-    return df
+
+def _spread(spark, path):
+    from mimic2ts_spark.operators.spread import ensure_parallelism
+
+    return ensure_parallelism(memo.read_parquet(spark, path))
 
 
 def _docs(spark, sf_dir):
@@ -54,28 +48,6 @@ def _docs(spark, sf_dir):
 
 def _embs(spark, sf_dir):
     return _spread_src(spark, f"{sf_dir}/embeddings.parquet")
-
-
-def _corpus_fingerprint(path: str) -> tuple:
-    """Per-file (name, size, mtime_ns) of a source parquet file or
-    directory — the r09 data-grade artifact-memo rule (ADVICE r12): a
-    disk-path memo keyed on the corpus PATH alone would silently serve
-    stale derived data after an in-process corpus rewrite; folding the
-    content fingerprint into the key makes the rewrite a memo miss
-    (same shape as search._impacts_fingerprint)."""
-    import os
-
-    try:
-        if os.path.isdir(path):
-            out = []
-            for n in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, n))
-                out.append((n, st.st_size, st.st_mtime_ns))
-            return tuple(out)
-        st = os.stat(path)
-        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
-    except OSError:
-        return ("missing",)
 
 
 # --- text analysis ---------------------------------------------------------
@@ -196,202 +168,120 @@ SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.8
 """
 
 
-# r15 (VERDICT r14 #6) — memo-build transparency: every disk memo pays
-# its one-time build inside the FIRST consumer's FIRST round, which the
-# bench best-of-3 then discards, so the recorded per-query seconds of
-# memo-registering queries price a parquet read. Each build records its
-# wall seconds here and bench.py emits the dict as a DETAIL-ONLY key
-# ("memo_build_sec") in BENCH_DETAIL.json — never in the compact driver
-# line.
-MEMO_BUILD_SECONDS: dict = {}
+# The derived relations below are disk artifacts (memo.artifact): the
+# driver gate releases Spark storage between queries, so a plan-cache
+# memo would rebuild per consumer, while disk pays the one-pass build
+# once per corpus per process. Each derivation is deterministic and its
+# parquet round-trip lossless, so every consumer's oracle hash is
+# unchanged; the oracles still derive from scratch.
 
 
-def _note_memo_build(name: str, corpus: str, t0: float) -> None:
-    import time as _time
-
-    tag = corpus.rstrip("/").rsplit("/", 1)[-1]
-    MEMO_BUILD_SECONDS[f"{name}:{tag}"] = round(_time.time() - t0, 3)
-
-
-# (sf_dir, threshold) -> parquet path of the canonical near-dup pair
-# relation — a DISK-path memo (the r07 multi-consumer doctrine: the
-# driver gate flushes Spark storage per query, so a plan-cache memo
-# would rebuild per consumer; disk pays the ~one-pass build once per
-# corpus per process). Deterministic derivation + lossless float64
-# parquet round-trip ⇒ every consumer's oracle hash unchanged.
-# Consumers: q_dedup_pipeline (the pairs themselves),
-# q_graph_communities_canonical (edge list), q_retrieval_map (ground
-# truth), _dedup_cluster_labels (CC input).
-_CANON_PAIRS_DIRS: dict = {}
-
-
+# The canonical near-dup pair relation. Consumers: q_dedup_pipeline (the
+# pairs themselves), q_graph_communities_canonical (edge list),
+# q_retrieval_map (ground truth), _dedup_cluster_labels (CC input).
 def _canon_pairs(spark, sf_dir, threshold: float = 0.8):
-    # content fingerprint in the key (ADVICE r12 / the r09 rule): an
-    # in-process rewrite of documents.parquet must miss the memo
-    key = (sf_dir, threshold, _corpus_fingerprint(f"{sf_dir}/documents.parquet"))
-    if key not in _CANON_PAIRS_DIRS:
-        from mimic2ts_spark.session import session_tmpdir
-        _b0 = __import__("time").time()
-
-        out = session_tmpdir(prefix="canon_pairs_")
-        # r14: build over the shared canonical-docs artifact —
+    def build(out):
         # canonical_near_dup_pairs ≡ canonical_docs → minhash_lsh_pairs
         # at the same threshold with the dup probe skipped (canonicals
-        # are distinct on the probe key by construction), so this is
-        # the same relation without re-running the canonicalization.
+        # are distinct on the probe key by construction), so building
+        # over the shared canonical-docs artifact gives the same relation
+        # without re-running the canonicalization.
         D.minhash_lsh_pairs(
             _canon_docs(spark, sf_dir),
             threshold=threshold,
             on_duplicates="ignore",
         ).write.mode("overwrite").parquet(out)
-        _CANON_PAIRS_DIRS[key] = out
-        _note_memo_build("canon_pairs", sf_dir, _b0)
-    return _mrp(spark, _CANON_PAIRS_DIRS[key])
+        return out
+
+    inputs = [f"{sf_dir}/documents.parquet"]
+    path = memo.artifact("canon_pairs", inputs, build, sf_dir, threshold)
+    return memo.read_parquet(spark, path)
 
 
-# (sf_dir, threshold) -> parquet path of the RAW minhash-LSH pair
-# relation (r14 — the same r07 multi-consumer disk-memo doctrine as
-# _canon_pairs, applied to the raw-baseline twin: q_dedup_minhash
-# registers these pairs and q_graph_communities consumes them as its
-# edge list, so per bench/gate call each re-ran the full
-# shingle+minhash+banding pipeline). Deterministic derivation ⇒ every
-# consumer's oracle hash unchanged; the dup-guard probe (warn) runs
-# once inside the build.
-_RAW_PAIRS_DIRS: dict = {}
-
-
+# The RAW minhash-LSH pair relation: q_dedup_minhash registers these
+# pairs and q_graph_communities consumes them as its edge list. The
+# dup-guard probe (warn) runs once inside the build.
 def _raw_pairs(spark, sf_dir, threshold: float = 0.8):
-    key = (sf_dir, threshold, _corpus_fingerprint(f"{sf_dir}/documents.parquet"))
-    if key not in _RAW_PAIRS_DIRS:
-        from mimic2ts_spark.session import session_tmpdir
-        _b0 = __import__("time").time()
-
-        out = session_tmpdir(prefix="raw_pairs_")
+    def build(out):
         D.minhash_lsh_pairs(
             _docs(spark, sf_dir), threshold=threshold, on_duplicates="warn"
         ).write.mode("overwrite").parquet(out)
-        _RAW_PAIRS_DIRS[key] = out
-        _note_memo_build("raw_pairs", sf_dir, _b0)
-    return _mrp(spark, _RAW_PAIRS_DIRS[key])
+        return out
+
+    inputs = [f"{sf_dir}/documents.parquet"]
+    path = memo.artifact("raw_pairs", inputs, build, sf_dir, threshold)
+    return memo.read_parquet(spark, path)
 
 
-# (sf_dir, threshold) -> parquet path of the raw EMBEDDING LSH pair
-# relation (r14, same doctrine): q_dedup_embedding_lsh registers it and
-# q_decontaminate_semantic projects its cross-set rows — each re-ran
-# the T-table banded self-join + cosine verify per call.
-_RAW_EMB_PAIRS_DIRS: dict = {}
-
-
+# The raw EMBEDDING LSH pair relation: q_dedup_embedding_lsh registers
+# it and q_decontaminate_semantic projects its cross-set rows.
 def _raw_emb_pairs(spark, sf_dir, threshold: float = 0.45):
-    key = (
-        sf_dir, threshold,
-        _corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
-    )
-    if key not in _RAW_EMB_PAIRS_DIRS:
-        from mimic2ts_spark.session import session_tmpdir
-        _b0 = __import__("time").time()
-
-        out = session_tmpdir(prefix="raw_emb_pairs_")
+    def build(out):
         S.embedding_near_dup_pairs_lsh(
             _embs(spark, sf_dir), threshold=threshold, on_duplicates="warn"
         ).write.mode("overwrite").parquet(out)
-        _RAW_EMB_PAIRS_DIRS[key] = out
-        _note_memo_build("raw_emb_pairs", sf_dir, _b0)
-    return _mrp(spark, _RAW_EMB_PAIRS_DIRS[key])
+        return out
+
+    inputs = [f"{sf_dir}/embeddings.parquet"]
+    path = memo.artifact("raw_emb_pairs", inputs, build, sf_dir, threshold)
+    return memo.read_parquet(spark, path)
 
 
-# sf_dir -> parquet path of the md5-CANONICAL documents relation
-# (dedup.canonical_docs over the corpus — r14, the same r07
-# multi-consumer disk-memo doctrine): SEVEN registered paths re-derived
-# the md5 groupBy + semi-join canonicalization per call
-# (q_jl_projection, q_dedup_recall, q_dedup_winnow,
+# The md5-CANONICAL documents relation (dedup.canonical_docs).
+# Consumers: q_jl_projection, q_dedup_recall, q_dedup_winnow,
 # q_dedup_containment_canonical, q_retrieval_mrr, q_retrieval_map and
-# the _canon_pairs build). Deterministic derivation (md5 + min-id) and
-# a lossless (BIGINT, VARCHAR) parquet round-trip ⇒ every consumer's
-# oracle hash unchanged; oracles still derive from scratch.
-_CANON_DOCS_DIRS: dict = {}
-
-
+# the _canon_pairs build.
 def _canon_docs(spark, sf_dir):
-    from mimic2ts_spark.operators.spread import ensure_parallelism
-
-    key = (sf_dir, _corpus_fingerprint(f"{sf_dir}/documents.parquet"))
-    if key not in _CANON_DOCS_DIRS:
-        _b0 = __import__("time").time()
-        out = session_tmpdir(prefix="canon_docs_")
+    def build(out):
         D.canonical_docs(_docs(spark, sf_dir)).write.mode("overwrite").parquet(
             out
         )
-        _CANON_DOCS_DIRS[key] = out
-        _note_memo_build("canon_docs", sf_dir, _b0)
+        return out
+
+    inputs = [f"{sf_dir}/documents.parquet"]
+    path = memo.artifact("canon_docs", inputs, build, sf_dir)
     # spread on read: canonical docs feed the same compute-dense md5 /
     # token hashing passes as _docs (the r01 one-split trap)
-    return _spread_src(spark, _CANON_DOCS_DIRS[key])
+    return _spread_src(spark, path)
 
 
-# sf_dir -> parquet path of the md5-CANONICAL vectors relation
-# (kmeans.canonical_vectors over the embeddings — r14, the r07
-# multi-consumer disk-memo doctrine, the vector twin of _canon_docs):
-# q_dedup_embedding_lsh_canonical and q_dedup_semantic_canonical each
-# re-derived the quantize+md5 groupBy + semi-join collapse per call,
-# and q_ann_knn_graph_canonical pays it once at graph build.
-# Deterministic derivation (md5 of quantized int coords + min-id) and
-# a lossless (BIGINT, array<DOUBLE>) parquet round-trip ⇒ every
-# consumer's oracle hash unchanged; oracles still derive from scratch.
-_CANON_VECS_DIRS: dict = {}
-
-
+# The md5-CANONICAL vectors relation (kmeans.canonical_vectors).
+# Consumers: q_dedup_embedding_lsh_canonical, q_dedup_semantic_canonical
+# and the q_ann_knn_graph_canonical graph build.
 def _canon_vecs(spark, sf_dir):
     from mimic2ts_spark.operators.kmeans import canonical_vectors
-    from mimic2ts_spark.operators.spread import ensure_parallelism
 
-    key = (sf_dir, _corpus_fingerprint(f"{sf_dir}/embeddings.parquet"))
-    if key not in _CANON_VECS_DIRS:
-        _b0 = __import__("time").time()
-        out = session_tmpdir(prefix="canon_vecs_")
+    def build(out):
         canonical_vectors(_embs(spark, sf_dir)).write.mode(
             "overwrite"
         ).parquet(out)
-        _CANON_VECS_DIRS[key] = out
-        _note_memo_build("canon_vecs", sf_dir, _b0)
+        return out
+
+    inputs = [f"{sf_dir}/embeddings.parquet"]
+    path = memo.artifact("canon_vecs", inputs, build, sf_dir)
     # spread on read: canonical vectors feed the same compute-dense
     # quantize/md5/hyperplane passes as _embs (the r01 one-split trap)
-    return _spread_src(spark, _CANON_VECS_DIRS[key])
+    return _spread_src(spark, path)
 
 
-# sf_dir -> dir holding the CANONICAL inverted index the panel-BM25
-# evals serve from (r14; the r13 codebook-vs-codes doctrine applied to
-# the retrieval evals): postings = search.build_postings over the
-# canonical docs ((term, doc_id, tf, dl) — one tokenize+explode+agg
-# pass per corpus per process) and doclens = (doc, dl, nt) carrying
-# EVERY canonical doc (nt = distinct-token count; token-less docs have
-# no postings rows but must still count in the BM25 totals).
-# Consumers: q_retrieval_mrr, q_retrieval_map. Deterministic build +
-# lossless integer/VARCHAR parquet round-trip ⇒ oracle hashes
-# unchanged; oracles still tokenize from scratch.
-_CANON_POSTINGS_DIRS: dict = {}
-
-
+# (postings, doclens) of the CANONICAL inverted index the panel-BM25
+# evals (q_retrieval_mrr, q_retrieval_map) serve from, built by the
+# `maintain canon-postings` artifact builder: postings over the
+# canonical docs, and doclens carrying EVERY canonical doc (token-less
+# docs have no postings rows but still count in the BM25 totals).
 def _canon_postings(spark, sf_dir):
-    # r15 (VERDICT r14 #7): the per-process memo is now a LOADER over
-    # the `maintain canon-postings` artifact builder — one code path for
-    # the CLI layout (with O(delta) idempotent append + compaction) and
-    # the in-process memo; the stored relation is unchanged (postings
-    # over canonical docs + full doclens), so every consumer's oracle
-    # hash and the served==scan equality pins are untouched.
     from mimic2ts_spark.operators.search import (
         build_canon_postings_artifact,
         load_canon_postings,
     )
 
-    key = (sf_dir, _corpus_fingerprint(f"{sf_dir}/documents.parquet"))
-    if key not in _CANON_POSTINGS_DIRS:
-        _b0 = __import__("time").time()
-        out = session_tmpdir(prefix="canon_postings_")
+    def build(out):
         build_canon_postings_artifact(spark, out, _docs(spark, sf_dir))
-        _CANON_POSTINGS_DIRS[key] = out
-        _note_memo_build("canon_postings", sf_dir, _b0)
-    return load_canon_postings(spark, _CANON_POSTINGS_DIRS[key])
+        return out
+
+    inputs = [f"{sf_dir}/documents.parquet"]
+    path = memo.artifact("canon_postings", inputs, build, sf_dir)
+    return load_canon_postings(spark, path)
 
 
 def q_dedup_pipeline(spark, sf_dir):
@@ -1049,37 +939,30 @@ SELECT * FROM ranked WHERE rank <= 5
 
 # X180/X181 — the k-NN graph is trained state shared by nine
 # graph-family queries. Like the X177 search indexes (and unlike the
-# CC-labels plan cache), the memo stores a DISK PATH: the build writes
-# the graph parquet once per (process, corpus) and consumers re-read
-# it — release_storage() hygiene flushes (one per gate query) cannot
-# force a rebuild, so only the FIRST graph query per gate run pays the
-# ~15 s build. Deterministic build ⇒ the artifact is byte-stable and
-# every oracle hash is unaffected.
-_KNN_GRAPH_CACHE: dict = {}  # sf_dir -> artifact parquet path (disk memo)
-
-
+# CC-labels plan cache) it is a disk artifact: the gate's per-query
+# release_storage() cannot force a rebuild, so only the FIRST graph
+# query per gate run pays the ~15 s build. Deterministic build ⇒ the
+# artifact is byte-stable and every oracle hash is unaffected.
+#
+# The graph artifact under memo key `key` (default `sf_dir`); `build`
+# returns the graph DataFrame (default: the registered X180 oracle
+# BASELINE, whose dup guard warns instead of raising). Builds may read
+# either corpus table, so both are fingerprinted.
 def _knn_graph(spark, sf_dir, key=None, build=None):
-    import os
+    from mimic2ts_spark.operators.knn import knn_graph
 
-    key = key or sf_dir
-    path = _KNN_GRAPH_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        from mimic2ts_spark.operators.knn import knn_graph
-
-        _b0 = __import__("time").time()
-
-        # the default build is the registered X180 oracle BASELINE —
-        # the dup guard warns instead of raising (dupguard.py)
+    def write(out):
         g = (
             build()
             if build is not None
             else knn_graph(_embs(spark, sf_dir), on_duplicates="warn")
         )
-        path = session_tmpdir(prefix="knn_graph_")
-        g.write.mode("overwrite").parquet(path)
-        _KNN_GRAPH_CACHE[key] = path
-        _note_memo_build("knn_graph", key, _b0)
-    return _mrp(spark, path)
+        g.write.mode("overwrite").parquet(out)
+        return out
+
+    inputs = [f"{sf_dir}/embeddings.parquet", f"{sf_dir}/documents.parquet"]
+    path = memo.artifact("knn_graph", inputs, write, key or sf_dir)
+    return memo.read_parquet(spark, path)
 
 
 def q_ann_knn_graph(spark, sf_dir):
@@ -1351,10 +1234,10 @@ def q_constraint_audit(spark, sf_dir):
         pk = pk_of.get(t)
         fks = fks_of.get(t, [])
         cols = list(dict.fromkeys(([pk] if pk else []) + [ck for ck, _, _ in fks]))
-        df = _mrp(spark, f"{sf_dir}/{t}.parquet").select(*cols)
+        df = memo.read_parquet(spark, f"{sf_dir}/{t}.parquet").select(*cols)
         for i, (ck, pt, ppk) in enumerate(fks):
             parent = (
-                _mrp(spark, f"{sf_dir}/{pt}.parquet")
+                memo.read_parquet(spark, f"{sf_dir}/{pt}.parquet")
                 .select(F.col(ppk).alias(ck))
                 .distinct()
                 .withColumn(f"_hit_{i}", F.lit(1))
@@ -1438,7 +1321,7 @@ def q_sample_apportion(spark, sf_dir):
     remainder window is harmless."""
     from pyspark.sql import Window
 
-    ev = _mrp(spark, f"{sf_dir}/events.parquet")
+    ev = memo.read_parquet(spark, f"{sf_dir}/events.parquet")
     counts = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows")
     )
@@ -2067,7 +1950,7 @@ def q_item_cf(spark, sf_dir):
     joined back WITHOUT a broadcast hint — the item vocabulary is
     unbounded at 100 TB, so AQE picks the strategy (it still broadcasts
     when the counts table is small)."""
-    ev = _mrp(spark, f"{sf_dir}/events.parquet")
+    ev = memo.read_parquet(spark, f"{sf_dir}/events.parquet")
     # persisted: consumed THREE times (sizes + both self-join sides) —
     # without it the events scan + JSON parse + distinct runs per
     # consumer (guide §5; the r14 multi-consumer-subtree pass)
@@ -2144,20 +2027,11 @@ def q_ann_ivf(spark, sf_dir):
 
 
 # Per-corpus persisted IVF index (the `maintain ivf` layout: centroids
-# JSON + cid-PARTITIONED postings), built once per process behind a
-# disk-path memo — the X177 _search_index_dir pattern (parquet on disk,
-# immune to the gate's release_storage; deterministic training keeps
-# the served oracle hash fixed). train_coarse shares the q_ann_ivf
-# cache_key, so the artifact's cells ARE the scan form's cells.
-_IVF_INDEX_CACHE: dict = {}
-
-
+# JSON + cid-PARTITIONED postings), a disk artifact like
+# _search_index_dir (deterministic training keeps the served oracle
+# hash fixed). train_coarse shares the q_ann_ivf cache_key, so the
+# artifact's cells ARE the scan form's cells.
 def _ivf_index_dir(spark, sf_dir):
-    # content fingerprint in the key (ADVICE r12 / the r09 rule): an
-    # in-process rewrite of embeddings.parquet must miss the memo
-    memo_key = (sf_dir, _corpus_fingerprint(f"{sf_dir}/embeddings.parquet"))
-    if memo_key in _IVF_INDEX_CACHE:
-        return _IVF_INDEX_CACHE[memo_key]
     import os
 
     from mimic2ts_spark.operators.dupguard import memoized_count
@@ -2166,74 +2040,62 @@ def _ivf_index_dir(spark, sf_dir):
         save_centroids,
         train_coarse,
     )
-    from mimic2ts_spark.session import session_tmpdir
 
-    _b0 = __import__("time").time()
-    out = session_tmpdir(prefix="ivf_idx_")
-    embs = _embs(spark, sf_dir)
-    n = memoized_count(embs.select("vec_id"))
-    cents = train_coarse(
-        embs, S.derived_cells(n), n=n, cache_key=sf_dir
+    def build(out):
+        embs = _embs(spark, sf_dir)
+        n = memoized_count(embs.select("vec_id"))
+        cents = train_coarse(
+            embs, S.derived_cells(n), n=n, cache_key=sf_dir
+        )
+        save_centroids(
+            cents, os.path.join(out, "centroids.json"),
+            meta={"n_base": n, "n_cells": len(cents), "rounds": KM_ROUNDS,
+                  "id_col": "vec_id", "vec_col": "embedding"},
+        )
+        # Hashing on cid first makes exactly one file per cell (guide §6
+        # small-files): without it the kernel's ~63 scan tasks each write
+        # a file per cell they touch (1,010 files for 16 cells at sf0.1,
+        # every one listed and opened by each serve). At the 256-cell cap
+        # and 10^9 slim posting rows that is ~100 MB/cell. The postings
+        # rows carry the raw coordinates (IVF-Flat), so every serve
+        # re-ranks from the probed cells' own files with no key join
+        # against the raw corpus.
+        S.assign_vectors(embs, cents).join(
+            embs.select("vec_id", F.col("embedding").alias("vec")), "vec_id"
+        ).repartition("cid").write.mode(
+            "overwrite"
+        ).partitionBy("cid").parquet(os.path.join(out, "postings"))
+        return out
+
+    return memo.artifact(
+        "ivf_index", [f"{sf_dir}/embeddings.parquet"], build, sf_dir
     )
-    save_centroids(
-        cents, os.path.join(out, "centroids.json"),
-        meta={"n_base": n, "n_cells": len(cents), "rounds": KM_ROUNDS,
-              "id_col": "vec_id", "vec_col": "embedding"},
-    )
-    # r14 (guide §6 small-files): without the repartition the kernel's
-    # ~63 scan tasks each write a file per cell they touch (measured
-    # 1,010 files for 16 cells at sf0.1 — every serve lists and opens
-    # all of them; the r13 ivf-compact lesson at build time). Hashing
-    # on cid first makes exactly one file per cell — at the 256-cell
-    # cap and 10^9 slim posting rows that is ~100 MB/cell, the right
-    # production file size.
-    # r15 (VERDICT r14 #2): carry the raw coordinates in the postings
-    # rows (IVF-Flat) so every serve re-ranks from the probed cells'
-    # own files — no per-serve key join against the raw corpus.
-    S.assign_vectors(embs, cents).join(
-        embs.select("vec_id", F.col("embedding").alias("vec")), "vec_id"
-    ).repartition("cid").write.mode(
-        "overwrite"
-    ).partitionBy("cid").parquet(os.path.join(out, "postings"))
-    _IVF_INDEX_CACHE[memo_key] = out
-    _note_memo_build("ivf_index", sf_dir, _b0)
-    return out
 
 
 # Per-corpus persisted quantized-codes artifacts (the `maintain
-# {bq,sq8,pq}-codes` layouts), built once per process behind the same
-# disk-path memo pattern as _ivf_index_dir — deterministic builds
-# (shared trained state via cache_key) keep every served oracle hash
-# identical to the scan form's.
-_CODES_ARTIFACT_CACHE: dict = {}
-
-
+# {bq,sq8,pq}-codes` layouts). Deterministic builds (shared trained
+# state via cache_key) keep every served oracle hash identical to the
+# scan form's.
 def _codes_artifact_dir(spark, sf_dir, kind: str) -> str:
     from mimic2ts_spark.operators import pq as PQ
 
-    memo_key = (
-        kind, sf_dir, _corpus_fingerprint(f"{sf_dir}/embeddings.parquet")
-    )
-    if memo_key in _CODES_ARTIFACT_CACHE:
-        return _CODES_ARTIFACT_CACHE[memo_key]
-    from mimic2ts_spark.session import session_tmpdir
+    def build(out):
+        embs = _embs(spark, sf_dir)
+        if kind == "bq":
+            PQ.build_bq_artifact(spark, out, embs)
+        elif kind == "sq8":
+            PQ.build_sq8_artifact(spark, out, embs, cache_key=sf_dir)
+        elif kind == "pq":
+            PQ.build_pq_artifact(spark, out, embs, cache_key=sf_dir)
+        elif kind == "ivfpq":
+            PQ.build_ivfpq_artifact(spark, out, embs, cache_key=sf_dir)
+        else:  # pragma: no cover - internal misuse
+            raise ValueError(f"unknown codes artifact kind: {kind}")
+        return out
 
-    _b0 = __import__("time").time()
-    out = session_tmpdir(prefix=f"{kind}_codes_")
-    embs = _embs(spark, sf_dir)
-    if kind == "bq":
-        PQ.build_bq_artifact(spark, out, embs)
-    elif kind == "sq8":
-        PQ.build_sq8_artifact(spark, out, embs, cache_key=sf_dir)
-    elif kind == "pq":
-        PQ.build_pq_artifact(spark, out, embs, cache_key=sf_dir)
-    elif kind == "ivfpq":
-        PQ.build_ivfpq_artifact(spark, out, embs, cache_key=sf_dir)
-    else:  # pragma: no cover - internal misuse
-        raise ValueError(f"unknown codes artifact kind: {kind}")
-    _CODES_ARTIFACT_CACHE[memo_key] = out
-    _note_memo_build(f"{kind}_codes", sf_dir, _b0)
-    return out
+    return memo.artifact(
+        f"{kind}_codes", [f"{sf_dir}/embeddings.parquet"], build, sf_dir
+    )
 
 
 def q_ann_ivf_indexed(spark, sf_dir):
@@ -3303,7 +3165,7 @@ def q_epoch_shuffle(spark, sf_dir):
     exchange would be pure waste."""
     from mimic2ts_spark.operators.split import epoch_shuffle
 
-    ids = _mrp(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    ids = memo.read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     return epoch_shuffle(ids, "doc_id", epoch=3)
 
 
@@ -3455,7 +3317,9 @@ def q_source_jsonl(spark, sf_dir):
     from mimic2ts_spark.operators.sketch import kmv_code
 
     out = session_tmpdir(prefix="source_jsonl_")
-    _mrp(spark, f"{sf_dir}/documents.parquet").write.mode("overwrite").json(out)
+    memo.read_parquet(spark, f"{sf_dir}/documents.parquet").write.mode(
+        "overwrite"
+    ).json(out)
     back = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
     ).json(out)
@@ -3493,7 +3357,7 @@ def q_source_csv_gz(spark, sf_dir):
 
     out = session_tmpdir(prefix="source_csvgz_")
     (
-        _mrp(spark, f"{sf_dir}/documents.parquet")
+        memo.read_parquet(spark, f"{sf_dir}/documents.parquet")
         .write.mode("overwrite")
         .option("header", True)
         .option("compression", "gzip")
@@ -3739,7 +3603,9 @@ def q_source_orc(spark, sf_dir):
     from mimic2ts_spark.operators.sketch import kmv_code
 
     out = session_tmpdir(prefix="source_orc_")
-    _mrp(spark, f"{sf_dir}/documents.parquet").write.mode("overwrite").orc(out)
+    memo.read_parquet(spark, f"{sf_dir}/documents.parquet").write.mode(
+        "overwrite"
+    ).orc(out)
     back = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
     ).orc(out)
@@ -5064,7 +4930,7 @@ def q_assoc_rules(spark, sf_dir):
     is unbounded at 100 TB, so AQE decides (only the 1-row basket-count
     scalar keeps an explicit broadcast)."""
     li = (
-        _mrp(spark, f"{sf_dir}/lineitem.parquet")
+        memo.read_parquet(spark, f"{sf_dir}/lineitem.parquet")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("item"))
         .distinct()
     )
@@ -5154,7 +5020,7 @@ def q_assoc_rules_longtail(spark, sf_dir):
     losslessness of the prune is pinned by a pytest comparing against
     the unpruned baseline."""
     li = (
-        _mrp(spark, f"{sf_dir}/lineitem.parquet")
+        memo.read_parquet(spark, f"{sf_dir}/lineitem.parquet")
         .select(
             F.col("l_orderkey").alias("o"),
             F.expr(RULES_SKU_EXPR.format(L="L")).alias("item"),
@@ -5571,63 +5437,55 @@ def _q_search_phrase_sql():
 Q_SEARCH_PHRASE_SQL = _q_search_phrase_sql()
 
 
-# Search-index artifacts memoized per sf_dir (driver-side PATH cache —
-# like pq._CODEBOOKS_CACHE, immune to release_storage: the state is
-# parquet on disk, not Spark storage). Queries sharing a corpus share
-# one index build; determinism keeps the oracle hashes fixed.
-_SEARCH_INDEX_CACHE: dict = {}
-
-
+# The search-index disk artifact: parquet on disk, immune to
+# release_storage like pq._CODEBOOKS_CACHE. Queries sharing a corpus
+# share one index build; determinism keeps the oracle hashes fixed.
 def _search_index_dir(spark, sf_dir):
-    if sf_dir in _SEARCH_INDEX_CACHE:
-        return _SEARCH_INDEX_CACHE[sf_dir]
-
     from mimic2ts_spark.operators.search import (
         build_positional_postings,
-        build_trigram_postings,
-    )
-
-    _b0 = __import__("time").time()
-    out = session_tmpdir(prefix="search_idx_")
-    docs = _docs(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    (
-        build_positional_postings(docs)
-        .repartition(par, "term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .parquet(f"{out}/positions")
-    )
-    (
-        build_trigram_postings(docs)
-        .repartition(par, "gram")
-        .sortWithinPartitions("gram", "doc_id")
-        .write.mode("overwrite")
-        .parquet(f"{out}/trigrams")
-    )
-    # BM25 postings + the impact-ordered stats MaxScore serving needs
-    # (r08): per-term (df, u_max) scalars and the 1-row corpus totals,
-    # all computed once at build time like a production inverted index
-    from mimic2ts_spark.operators.search import (
         build_postings,
         build_term_impacts,
+        build_trigram_postings,
         corpus_stats,
     )
 
-    postings = build_postings(docs).repartition(par, "term").sortWithinPartitions(
-        "term", "doc_id"
+    def build(out):
+        docs = _docs(spark, sf_dir)
+        par = spark.sparkContext.defaultParallelism
+        (
+            build_positional_postings(docs)
+            .repartition(par, "term")
+            .sortWithinPartitions("term", "doc_id")
+            .write.mode("overwrite")
+            .parquet(f"{out}/positions")
+        )
+        (
+            build_trigram_postings(docs)
+            .repartition(par, "gram")
+            .sortWithinPartitions("gram", "doc_id")
+            .write.mode("overwrite")
+            .parquet(f"{out}/trigrams")
+        )
+        # BM25 postings + the impact-ordered stats MaxScore serving
+        # needs: per-term (df, u_max) scalars and the 1-row corpus
+        # totals, all computed once at build time like a production
+        # inverted index
+        postings = build_postings(docs).repartition(
+            par, "term"
+        ).sortWithinPartitions("term", "doc_id")
+        postings.write.mode("overwrite").parquet(f"{out}/postings")
+        stats = corpus_stats(docs)
+        build_term_impacts(
+            spark.read.parquet(f"{out}/postings"), stats
+        ).coalesce(1).write.mode("overwrite").parquet(f"{out}/impacts")
+        spark.createDataFrame(
+            [(stats["n_docs"], stats["sum_dl"])], "n_docs long, sum_dl long"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{out}/stats")
+        return out
+
+    return memo.artifact(
+        "search_index", [f"{sf_dir}/documents.parquet"], build, sf_dir
     )
-    postings.write.mode("overwrite").parquet(f"{out}/postings")
-    stats = corpus_stats(docs)
-    build_term_impacts(
-        spark.read.parquet(f"{out}/postings"), stats
-    ).coalesce(1).write.mode("overwrite").parquet(f"{out}/impacts")
-    spark.createDataFrame(
-        [(stats["n_docs"], stats["sum_dl"])], "n_docs long, sum_dl long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{out}/stats")
-    _SEARCH_INDEX_CACHE[sf_dir] = out
-    _note_memo_build("search_index", sf_dir, _b0)
-    return out
 
 
 _SEARCH_STATS_CACHE: dict = {}  # idx dir -> {n_docs, sum_dl} (1-row memo)
@@ -6093,10 +5951,10 @@ def q_graph_pagerank(spark, sf_dir):
     shuffle join + one hash aggregate; ranks never leave the cluster."""
     from mimic2ts_spark.operators.graph import build_transition_edges, pagerank_scaled
 
-    li = _mrp(spark, f"{sf_dir}/lineitem.parquet").select(
+    li = memo.read_parquet(spark, f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_suppkey", "l_linenumber"
     )
-    orders = _mrp(spark, f"{sf_dir}/orders.parquet").select(
+    orders = memo.read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
     seq = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
@@ -6322,7 +6180,7 @@ def q_basket_pairs(spark, sf_dir):
     basket size, never corpus² — then a pair hash-agg and a 1-row-per-
     pair TakeOrdered top-k. Tie-break (n DESC, part_a, part_b)."""
     li = (
-        _mrp(spark, f"{sf_dir}/lineitem.parquet")
+        memo.read_parquet(spark, f"{sf_dir}/lineitem.parquet")
         .select("l_orderkey", "l_partkey")
         .distinct()
         # persisted: both self-join sides — unpersisted the scan +
@@ -6378,10 +6236,10 @@ def q_graph_triangles(spark, sf_dir):
     vertices via a 3-way role union."""
     from pyspark.sql import Window as W
 
-    li = _mrp(spark, f"{sf_dir}/lineitem.parquet").select(
+    li = memo.read_parquet(spark, f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_suppkey", "l_linenumber"
     )
-    orders = _mrp(spark, f"{sf_dir}/orders.parquet").select(
+    orders = memo.read_parquet(spark, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
     seq = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
@@ -6883,7 +6741,7 @@ def q_skew_report(spark, sf_dir):
     the fact), global top-10 hottest keys as TakeOrderedAndProject, and
     each key's integer per-mille share of total rows via a 1-row scalar
     broadcast. Output (key, n, permille)."""
-    li = _mrp(spark, f"{sf_dir}/lineitem.parquet").select("l_suppkey")
+    li = memo.read_parquet(spark, f"{sf_dir}/lineitem.parquet").select("l_suppkey")
     counts = li.groupBy(F.col("l_suppkey").alias("key")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -7094,32 +6952,29 @@ def _q_dedup_semantic_canonical_sql():
 Q_DEDUP_SEMANTIC_CANONICAL_SQL = _q_dedup_semantic_canonical_sql()
 
 
-_CLS_STREAM_CACHE: dict = {}  # sf_dir -> scored-output dir (disk-path memo)
-
-
 def q_stream_classifier(spark, sf_dir):
     """X210 — streaming model-apply gate (streaming.py
     run_classifier_available_now): every arriving doc scored against
     the persisted X208 weight artifact, scored rows appended. Scoring
     is a pure per-row function of the final doc set (fixed dense
     weights) ⇒ batching-invariant ⇒ the drained output bit-equals the
-    batch apply, whose SQL is the oracle (the X204 doctrine). Disk-path
-    memo per sf_dir (deterministic build; the maxFilesPerTrigger pytest
-    keeps the multi-batch path covered)."""
-    if sf_dir not in _CLS_STREAM_CACHE:
+    batch apply, whose SQL is the oracle (the X204 doctrine). A disk
+    artifact per corpus (deterministic build; the maxFilesPerTrigger
+    pytest keeps the multi-batch path covered)."""
+    from mimic2ts_spark.operators.text import build_classifier_weights
+    from mimic2ts_spark.streaming import run_classifier_available_now
 
-        from mimic2ts_spark.operators.text import build_classifier_weights
-        from mimic2ts_spark.streaming import run_classifier_available_now
+    def build(out):
+        build_classifier_weights(spark, f"{out}/weights")
+        run_classifier_available_now(
+            spark, sf_dir, f"{out}/weights", f"{out}/scored"
+        )
+        return f"{out}/scored"
 
-        wdir = session_tmpdir(prefix="cls_weights_")
-        build_classifier_weights(spark, wdir)
-        out = session_tmpdir(prefix="cls_stream_") + "/scored"
-        run_classifier_available_now(spark, sf_dir, wdir, out)
-        _CLS_STREAM_CACHE[sf_dir] = out
-    return _mrp(spark, _CLS_STREAM_CACHE[sf_dir])
-
-
-_POSTINGS_INGEST_CACHE: dict = {}  # sf_dir -> (postings_dir, stats)
+    path = memo.artifact(
+        "cls_stream", [f"{sf_dir}/documents.parquet"], build, sf_dir
+    )
+    return memo.read_parquet(spark, path)
 
 
 def q_stream_postings_ingest(spark, sf_dir):
@@ -7130,29 +6985,29 @@ def q_stream_postings_ingest(spark, sf_dir):
     live), and the returned BM25 top-k SERVED from the drained index
     bit-equals full corpus-scan scoring over ALL docs, whose SQL is
     the oracle — the strongest contract in the streaming family (X194
-    can only quality-pin; BM25 state is batching-invariant)."""
-    from mimic2ts_spark.operators.search import bm25_from_postings
-    from mimic2ts_spark.streaming import run_postings_ingest_available_now
+    can only quality-pin; BM25 state is batching-invariant).
 
-    # Disk-path memo per sf_dir (the _search_index_dir / kNN-graph
-    # pattern, ADVICE r08): the ingest is deterministic, so rebuilding
-    # the base index + re-draining the delta stream on every gate/bench
-    # invocation pays the full build repeatedly and leaks a tempdir per
-    # call for identical bytes. The streaming path itself stays covered
-    # by the maxFilesPerTrigger batching-invariance pytest.
-    if sf_dir not in _POSTINGS_INGEST_CACHE:
+    The drained index is a disk artifact per corpus: the ingest is
+    deterministic, so rebuilding the base index and re-draining the
+    delta stream on every gate/bench call would pay the full build for
+    identical bytes. The streaming path itself stays covered by the
+    maxFilesPerTrigger batching-invariance pytest."""
+    from mimic2ts_spark.operators.search import bm25_from_postings, corpus_stats
+    from mimic2ts_spark.streaming import (
+        docs_stream_base,
+        run_postings_ingest_available_now,
+    )
 
-        out = session_tmpdir(prefix="postings_ingest_")
+    def build(out):
         run_postings_ingest_available_now(
             spark, sf_dir, out, BM25_QUERY_TERMS
         )
-        from mimic2ts_spark.operators.search import corpus_stats
-        from mimic2ts_spark.streaming import docs_stream_base
-
         # drained stats == full-corpus stats (additive, batching-invariant)
-        stats = corpus_stats(docs_stream_base(spark, sf_dir))
-        _POSTINGS_INGEST_CACHE[sf_dir] = (f"{out}/postings", stats)
-    data_dir, stats = _POSTINGS_INGEST_CACHE[sf_dir]
+        return f"{out}/postings", corpus_stats(docs_stream_base(spark, sf_dir))
+
+    data_dir, stats = memo.artifact(
+        "postings_ingest", [f"{sf_dir}/documents.parquet"], build, sf_dir
+    )
     return bm25_from_postings(spark, data_dir, stats, BM25_QUERY_TERMS)
 
 
@@ -7642,7 +7497,7 @@ def q_zorder_layout(spark, sf_dir):
     is the 256-group stats aggregate."""
     from mimic2ts_spark.operators.layout import zorder_bucket_stats
 
-    li = _mrp(spark, f"{sf_dir}/lineitem.parquet").select(
+    li = memo.read_parquet(spark, f"{sf_dir}/lineitem.parquet").select(
         "l_partkey", "l_suppkey"
     )
     return zorder_bucket_stats(
@@ -7956,28 +7811,24 @@ FROM documents WHERE doc_id % 7 = 0
 # content-stable state — latest content is invariant under the extra
 # compact commits q_versioned_compact adds (content-identical rewrite),
 # and v0/v1 manifests are retained (no vacuum here).
-_VERSIONED_SCENARIO: dict[str, str] = {}
-
-
 def _versioned_scenario(spark, sf_dir):
     """Shared X130–X134 setup: init v0 from the q_merge_upsert base,
     commit one merge as v1; returns the (memoized) table path."""
-
     from mimic2ts_spark.operators.versioned import init_table, merge_versioned
 
-    if sf_dir in _VERSIONED_SCENARIO:
-        return _VERSIONED_SCENARIO[sf_dir]
-    d = _docs(spark, sf_dir)
-    base = d.where(F.col("doc_id") % 10 != 3)
-    updates = d.where(F.col("doc_id") % 7 == 0).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" v2"))
-    ).withColumn("n_chars", F.col("n_chars") + 3)
+    def build(out):
+        d = _docs(spark, sf_dir)
+        base = d.where(F.col("doc_id") % 10 != 3)
+        updates = d.where(F.col("doc_id") % 7 == 0).withColumn(
+            "text", F.concat(F.col("text"), F.lit(" v2"))
+        ).withColumn("n_chars", F.col("n_chars") + 3)
+        init_table(base, out, "doc_id")
+        merge_versioned(spark, out, updates, "doc_id")
+        return out
 
-    path = session_tmpdir(prefix="versioned_")
-    init_table(base, path, "doc_id")
-    merge_versioned(spark, path, updates, "doc_id")
-    _VERSIONED_SCENARIO[sf_dir] = path
-    return path
+    return memo.artifact(
+        "versioned", [f"{sf_dir}/documents.parquet"], build, sf_dir
+    )
 
 
 def _bucket_rollup(df):

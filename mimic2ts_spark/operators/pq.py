@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mimic2ts_spark import memo
 from mimic2ts_spark.operators.kmeans import (
     KM_ROUNDS,
     _sql_quant,
@@ -51,13 +52,6 @@ from mimic2ts_spark.operators.kmeans import (
     train_coarse,
 )
 
-
-def _memo_read(spark, path):
-    """Lazy import: sources imports the operators package, so a
-    module-level import here would be circular."""
-    from mimic2ts_spark.sources import memo_read_parquet
-
-    return memo_read_parquet(spark, path)
 
 PQ_M = 4        # subspaces
 PQ_SUB = 16     # dims per subspace (embeddings are 64-d)
@@ -1682,7 +1676,7 @@ def serve_bq_artifact(
     the filter prunes the 8-byte scan itself."""
     import os
 
-    codes = _memo_read(spark, os.path.join(out_dir, "codes"))
+    codes = memo.read_parquet(spark, os.path.join(out_dir, "codes"))
     if allowed is not None:
         ids = allowed.select(F.col(allowed.columns[0]).alias("vec_id"))
         codes = codes.join(ids, "vec_id", "left_semi")
@@ -1932,7 +1926,7 @@ def serve_sq8_artifact(
     Q = np.array([[int(v) for v in r["qx"]] for r in q_rows], dtype=np.int64)
     q_norm = (Q * Q).sum(axis=1)
 
-    codes = _memo_read(spark, os.path.join(out_dir, "codes"))
+    codes = memo.read_parquet(spark, os.path.join(out_dir, "codes"))
     if allowed is not None:
         ids = allowed.select(F.col(allowed.columns[0]).alias("vec_id"))
         codes = codes.join(ids, "vec_id", "left_semi")
@@ -2185,7 +2179,7 @@ def serve_pq_artifact(
     import os
 
     books = load_codebooks(os.path.join(out_dir, PQ_BOOKS_FILE))
-    codes = _memo_read(spark, os.path.join(out_dir, "codes"))
+    codes = memo.read_parquet(spark, os.path.join(out_dir, "codes"))
     if allowed is not None:
         ids = allowed.select(F.col(allowed.columns[0]).alias("vec_id"))
         codes = codes.join(ids, "vec_id", "left_semi")
@@ -2468,7 +2462,7 @@ def serve_ivfpq_artifact(
             ]
             queries_by_cell.setdefault(cell, []).append(qid)
 
-    codes = _memo_read(spark, os.path.join(out_dir, "codes")).where(
+    codes = memo.read_parquet(spark, os.path.join(out_dir, "codes")).where(
         F.col("cid").isin(sorted(queries_by_cell))
     )
     if allowed is not None:

@@ -35,15 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mimic2ts_spark import memo
 from mimic2ts_spark.operators.text import SQL_TOKENS, tokens
 
-
-def _memo_read(spark, path):
-    """Lazy import: sources imports the operators package, so a
-    module-level import here would be circular."""
-    from mimic2ts_spark.sources import memo_read_parquet
-
-    return memo_read_parquet(spark, path)
 
 SCALE = 100_000
 # k1 = 6/5, b = 3/4 — the usual BM25 defaults as exact rationals (the
@@ -472,7 +466,6 @@ def build_canon_postings_artifact(
     so appends stay stats-consistent for free (df is recomputed by the
     reader, the build_postings contract). Deterministic build ⇒ served
     == scan-form bit-equal (the equality pins in tests/)."""
-    import json
     import os
 
     from mimic2ts_spark.operators.dedup import canonical_docs, exact_text_map
@@ -493,9 +486,9 @@ def build_canon_postings_artifact(
         F.size(F.array_distinct(toks)).cast("long").alias("nt"),
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "doclens"))
     n_canon = spark.read.parquet(os.path.join(out_dir, "doclens")).count()
-    meta = {"text_col": text_col, "id_col": id_col, "n_canon": n_canon}
-    with open(os.path.join(out_dir, "_canon_postings_meta.json"), "w") as f:
-        json.dump(meta, f)
+    _write_canon_postings_meta(
+        out_dir, {"text_col": text_col, "id_col": id_col, "n_canon": n_canon}
+    )
     return {
         "n_docs": docs.count(),
         "n_canon": n_canon,
@@ -528,7 +521,10 @@ def append_canon_postings_artifact(
 
     map_dir = os.path.join(out_dir, "canon_map")
     stored = spark.read.parquet(map_dir)
-    d = delta.withColumn("_h", F.md5(F.col(text_col)))
+    # a row repeated within the batch is one doc, not two
+    d = delta.withColumn("_h", F.md5(F.col(text_col))).dropDuplicates(
+        ["_h", id_col]
+    )
     new = d.join(
         stored.select(F.col("text_md5").alias("_h")), "_h", "left_anti"
     )
@@ -573,11 +569,28 @@ def append_canon_postings_artifact(
         meta = {"text_col": text_col, "id_col": id_col, "n_canon": None}
     if meta.get("n_canon") is not None:
         meta["n_canon"] = int(meta["n_canon"]) + n_new
-        tmp = meta_path + ".tmp"
+        _write_canon_postings_meta(out_dir, meta)
+    return {"n_delta": n_new, "n_canon": meta.get("n_canon")}
+
+
+def _write_canon_postings_meta(out_dir: str, meta: dict) -> None:
+    """Write the meta to a temp name, then rename it over the final name
+    (atomic on POSIX): a crash mid-write leaves the previous meta (or
+    none), never a truncated one. A write that raises removes its temp
+    file."""
+    import json
+    import os
+
+    path = os.path.join(out_dir, "_canon_postings_meta.json")
+    tmp = path + ".tmp"
+    try:
         with open(tmp, "w") as f:
             json.dump(meta, f)
-        os.replace(tmp, meta_path)
-    return {"n_delta": n_new, "n_canon": meta.get("n_canon")}
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 def load_canon_postings(spark, out_dir: str):
@@ -585,12 +598,10 @@ def load_canon_postings(spark, out_dir: str):
     consume: postings (term, doc, tf, dl), doclens (doc, dl, nt)."""
     import os
 
-    from mimic2ts_spark.sources import memo_read_parquet as _mrp
-
-    postings = _mrp(spark, os.path.join(out_dir, "postings")).select(
-        "term", F.col("doc_id").alias("doc"), "tf", "dl"
-    )
-    doclens = _mrp(spark, os.path.join(out_dir, "doclens"))
+    postings = memo.read_parquet(
+        spark, os.path.join(out_dir, "postings")
+    ).select("term", F.col("doc_id").alias("doc"), "tf", "dl")
+    doclens = memo.read_parquet(spark, os.path.join(out_dir, "doclens"))
     return postings, doclens
 
 
@@ -629,7 +640,9 @@ def bm25_from_postings(
     not redefine term rarity — and it must not retrain/rewrite any
     artifact state, the X221 rule). Pytest-pinned equal to filtering
     the full scored relation pre-cut."""
-    tf = _memo_read(spark, postings_dir).where(F.col("term").isin(*query_terms))
+    tf = memo.read_parquet(spark, postings_dir).where(
+        F.col("term").isin(*query_terms)
+    )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     if allowed is not None:
         ids = allowed.select(F.col(allowed.columns[0]).alias("doc_id"))
@@ -794,7 +807,7 @@ def phrase_from_postings(
         term_rows, "phrase string, idx int, term string, k int"
     )
     hits = (
-        _memo_read(spark, postings_dir)
+        memo.read_parquet(spark, postings_dir)
         .where(F.col("term").isin(*terms))
         .select("term", "doc_id", F.explode("positions").alias("pos"))
         .join(F.broadcast(terms_df), "term")
@@ -914,7 +927,7 @@ def substring_from_trigram_postings(
     vocab = sorted({g for _, g, _ in gram_rows})
     grams_df = spark.createDataFrame(gram_rows, "needle string, gram string, k int")
     cand = (
-        _memo_read(spark, postings_dir)
+        memo.read_parquet(spark, postings_dir)
         .where(F.col("gram").isin(*vocab))
         .join(F.broadcast(grams_df), "gram")
         .groupBy("needle", "doc_id")
@@ -1664,7 +1677,7 @@ def build_term_impacts(postings: DataFrame, stats: dict) -> DataFrame:
 # Per-(index, panel) driver memo of the |q| collected impact rows — the
 # in-memory term dictionary every serving system keeps hot. Bounded at
 # |q| rows per distinct panel; keyed on the index DIR plus an artifact
-# FINGERPRINT (per-file name/size/mtime_ns of the impacts dir), so both
+# FINGERPRINT (memo.fingerprint of the impacts dir), so both
 # a rebuilt index (new tempdir) and an IN-PLACE rebuild (maintain
 # postings-append --impacts) miss the memo and re-collect fresh stats —
 # stale u_max could under-bound B and silently break the prune theorem
@@ -1674,31 +1687,11 @@ def build_term_impacts(postings: DataFrame, stats: dict) -> DataFrame:
 _TERM_IMPACTS_CACHE: dict = {}
 
 
-def _impacts_fingerprint(impacts_dir: str) -> tuple:
-    """(name, size, mtime_ns) of every data file in the artifact dir —
-    cheap (an impacts table is a handful of files) and changes whenever
-    maintain rewrites the parquet, even at the same path."""
-    import os
-
-    try:
-        names = sorted(os.listdir(impacts_dir))
-    except OSError:
-        return ("missing",)
-    out = []
-    for n in names:
-        try:
-            st = os.stat(os.path.join(impacts_dir, n))
-            out.append((n, st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append((n, -1, -1))
-    return tuple(out)
-
-
 def _term_impacts_cached(spark, impacts_dir: str, query_terms: tuple):
-    key = (impacts_dir, _impacts_fingerprint(impacts_dir), tuple(query_terms))
+    key = (impacts_dir, memo.fingerprint(impacts_dir), tuple(query_terms))
     if key not in _TERM_IMPACTS_CACHE:
         _TERM_IMPACTS_CACHE[key] = (
-            _memo_read(spark, impacts_dir)
+            memo.read_parquet(spark, impacts_dir)
             .where(F.col("term").isin(*query_terms))
             .collect()
         )
@@ -1735,7 +1728,7 @@ def bm25_topk_maxscore_from_postings(
     The win condition is a query mixing one rare high-idf term with a
     low-impact tail (the Turtle & Flood regime): anchor postings are
     the rare term's, and the corpus-sized aggregate never runs."""
-    postings = _memo_read(spark, postings_dir)
+    postings = memo.read_parquet(spark, postings_dir)
     imp = _term_impacts_cached(spark, impacts_dir, query_terms)
     full = lambda: bm25_from_postings(  # noqa: E731
         spark, postings_dir, stats, query_terms, k

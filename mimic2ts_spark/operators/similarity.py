@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mimic2ts_spark import memo
+
 DIM = 64
 LSH_TABLES = 4
 LSH_PLANES = 4  # bits per table
@@ -1308,9 +1310,7 @@ def serve_ivf_artifact(
     probed = spark.createDataFrame(
         probe_rows, "query_id long, cell long"
     )
-    from mimic2ts_spark.sources import memo_read_parquet as _memo_read
-
-    post_raw = _memo_read(spark, os.path.join(out_dir, "postings"))
+    post_raw = memo.read_parquet(spark, os.path.join(out_dir, "postings"))
     # r15 (VERDICT r14 #2): postings built/appended since r15 CARRY the
     # raw coordinates (IVF-Flat layout) — the exact-cosine re-rank then
     # reads nvec from the probed cells' own files and the per-serve key

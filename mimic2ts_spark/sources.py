@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mimic2ts_spark import schemas
+from mimic2ts_spark import memo, schemas
 from mimic2ts_spark.operators.time_ops import parse_epoch_seconds, total_windows
 
 _TABLES = {
@@ -87,55 +87,4 @@ def load_stays(
 
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Harness-table loader for /root/testdata/sf*/ (TESTDATA.md)."""
-    return memo_read_parquet(spark, f"{sf_dir}/{name}.parquet")
-
-
-# --- memoized source-read resolution (r15, guide §1.2 "pre-resolved reads") --
-#
-# Every fresh `spark.read.parquet(path)` pays ~55-70 ms of driver-side
-# work (file listing, footer schema read, relation resolution) — measured
-# r15 on this box, best-of-5 per table. A many-query session (bench: 153
-# queries × 3 rounds × ~2 source tables each) re-resolves the SAME
-# immutable files hundreds of times, and that fixed cost dominates the
-# sub-second query tail (VERDICT r14 #1). The memo returns the
-# already-resolved DataFrame (an immutable lazy plan — NO data is cached,
-# nothing survives the process, every action still computes from the
-# parquet bytes), keyed on the session object plus a content fingerprint
-# (size, mtime_ns per file — the r09 data-grade memo rule), so an
-# in-process rewrite of the file is a memo miss. Deliberately NOT
-# registered with session.register_plan_cache: the plan holds no
-# storage and is always recomputable, so release_storage must not (and
-# need not) clear it.
-
-_READ_MEMO: dict = {}
-
-
-def _file_fingerprint(path: str) -> tuple:
-    import os
-
-    try:
-        if os.path.isdir(path):
-            out = []
-            for n in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, n))
-                out.append((n, st.st_size, st.st_mtime_ns))
-            return tuple(out)
-        st = os.stat(path)
-        return (st.st_size, st.st_mtime_ns)
-    except OSError:
-        return ("missing",)
-
-
-def memo_read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark, path, _file_fingerprint(path))
-    df = _READ_MEMO.get(key)
-    if df is None:
-        # testdata `events.ts` is physical TIMESTAMP(NANOS); resolving it
-        # requires the legacy read-as-long flag (harness._t's contract).
-        # Set session-wide before ANY memoized resolution so entry order
-        # can never matter (pre-memo, a raw events read only worked when
-        # a prior _t call had already set the conf).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        _READ_MEMO[key] = df
-    return df
+    return memo.read_parquet(spark, f"{sf_dir}/{name}.parquet")

@@ -22,8 +22,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mimic2ts_spark import memo
 from mimic2ts_spark.session import session_tmpdir
-from mimic2ts_spark.sources import memo_read_parquet as _mrp
 from pyspark.sql import types as T
 
 EVENTS_STREAM_SCHEMA = T.StructType(
@@ -593,7 +593,7 @@ def run_incremental_dedup_available_now(spark: SparkSession, sf_dir: str) -> Dat
     """Stream the doc_id%10==0 shard against the static remainder-corpus
     and drain the pair stream to its static result."""
     name = f"incdedup_{uuid.uuid4().hex[:8]}"
-    corpus = _mrp(spark, f"{sf_dir}/documents.parquet").where(
+    corpus = memo.read_parquet(spark, f"{sf_dir}/documents.parquet").where(
         F.col("doc_id") % 10 != 0
     )
     stream_new = docs_stream(spark, sf_dir).where(F.col("doc_id") % 10 == 0)
@@ -1063,7 +1063,7 @@ def run_ann_ingest_available_now(
     from mimic2ts_spark.operators.kmeans import train_coarse
     from mimic2ts_spark.operators.similarity import assign_vectors, derived_cells
 
-    base = _mrp(spark, f"{sf_dir}/embeddings.parquet").where(
+    base = memo.read_parquet(spark, f"{sf_dir}/embeddings.parquet").where(
         F.col("vec_id") % 10 != 0
     )
     n = base.count()
@@ -1107,7 +1107,7 @@ def run_knn_ingest_available_now(
         build_knn_artifact,
     )
 
-    base = _mrp(spark, f"{sf_dir}/embeddings.parquet").where(
+    base = memo.read_parquet(spark, f"{sf_dir}/embeddings.parquet").where(
         F.col("vec_id") % 10 != 0
     )
     build_knn_artifact(spark, out_dir, base)
@@ -1247,7 +1247,7 @@ def run_classifier_available_now(
 def docs_stream_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch view of the documents table (the accepted-corpus side of
     the ingest splits)."""
-    return _mrp(spark, f"{sf_dir}/documents.parquet")
+    return memo.read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
 def run_bq_ingest_available_now(

@@ -123,9 +123,9 @@ def main() -> None:
         "probe_cpu_sec": round(min(probe_pre, min(cpu_once() for _ in range(3))), 4),
     }
     try:
-        from mimic2ts_spark.harness_ext import MEMO_BUILD_SECONDS
+        from mimic2ts_spark.memo import BUILD_SECONDS
 
-        out["memo_build_sec"] = dict(MEMO_BUILD_SECONDS)
+        out["memo_build_sec"] = dict(BUILD_SECONDS)
     except Exception:
         pass
     with open(out_json, "w") as f:

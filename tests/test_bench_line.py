@@ -58,3 +58,15 @@ def test_headline_names_all_registered():
 
     missing = [n for n in HEADLINE if n not in harness.REGISTRY]
     assert not missing, missing
+
+
+def test_memo_build_seconds_reach_the_bench(spark):
+    """bench.py reads the artifact build telemetry inside `except
+    Exception`; a renamed source would silently blank memo_build_sec."""
+    from test_extensions import SF
+
+    from bench import _memo_build_seconds
+    from mimic2ts_spark.harness_ext import _canon_docs
+
+    _canon_docs(spark, SF)
+    assert "canon_docs:sf0.001" in _memo_build_seconds()

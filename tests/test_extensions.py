@@ -39,19 +39,101 @@ def test_sql_sub_guards_drifted_targets():
 
 
 def test_impacts_fingerprint_tracks_rewrites(tmp_path):
-    """r09 (ADVICE r08): the impacts memo key must change when the
-    artifact dir's contents change (in-place rebuild detection), and
-    degrade gracefully on a missing dir."""
-    from mimic2ts_spark.operators.search import _impacts_fingerprint
+    """The memo fingerprint (which keys the term-impacts memo) must
+    change when the artifact dir's contents change (in-place rebuild
+    detection), and degrade gracefully on a missing dir."""
+    from mimic2ts_spark.memo import fingerprint
 
     d = tmp_path / "imp"
-    assert _impacts_fingerprint(str(d)) == ("missing",)
+    assert fingerprint(str(d)) == ("missing",)
     d.mkdir()
     (d / "part-0.parquet").write_bytes(b"aaa")
-    f1 = _impacts_fingerprint(str(d))
+    f1 = fingerprint(str(d))
     (d / "part-0.parquet").write_bytes(b"bbbb")  # same name, new bytes
-    f2 = _impacts_fingerprint(str(d))
+    f2 = fingerprint(str(d))
     assert f1 != f2
+
+
+def test_fingerprint_sees_nested_partition_rewrite(tmp_path):
+    """An in-place rewrite inside a `cid=3/` partition leaves the
+    top-level listing (names, dir sizes and mtimes) unchanged; the
+    fingerprint must still change."""
+    import os
+
+    from mimic2ts_spark.memo import fingerprint
+
+    part = tmp_path / "postings" / "cid=3" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    part.write_bytes(b"aaa")
+    os.utime(part, ns=(1, 1))
+    f1 = fingerprint(str(tmp_path / "postings"))
+    part.write_bytes(b"bbbb")
+    assert fingerprint(str(tmp_path / "postings")) != f1
+
+
+def test_read_memo_keeps_one_entry_per_path(spark, tmp_path):
+    """k in-place rewrites of one path: every read sees the new bytes,
+    and the memo holds one plan for the path, not k."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mimic2ts_spark import memo
+
+    path = str(tmp_path / "t.parquet")
+    os.makedirs(path)
+    for k in range(1, 5):
+        pq.write_table(
+            pa.table({"x": list(range(k))}), os.path.join(path, "part-0.parquet")
+        )
+        assert memo.read_parquet(spark, path).count() == k
+    assert sum(1 for key in memo._PLANS if key[1] == path) == 1
+
+
+def test_memo_hit_runs_no_spark_job(spark):
+    """A repeated call is served from the memos (artifact dir, then the
+    resolved, spread plan) without one Spark job."""
+    from mimic2ts_spark.harness_ext import _canon_docs
+
+    sc = spark.sparkContext
+    first = _canon_docs(spark, SF)
+    sc.setJobGroup("memo_hit", "memo_hit")
+    try:
+        again = _canon_docs(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again is first
+    assert list(sc.statusTracker().getJobIdsForGroup("memo_hit")) == []
+
+
+def test_artifact_rebuilds_when_output_or_input_changes(tmp_path):
+    """memo.artifact builds once per input content; a deleted output
+    dir or a rewritten input makes the next call rebuild."""
+    import os
+    import shutil
+
+    from mimic2ts_spark import memo
+
+    src = tmp_path / "src.txt"
+    src.write_text("a")
+    builds = []
+
+    def build(out):
+        builds.append(out)
+        return out
+
+    def get():
+        return memo.artifact("test_artifact", [str(src)], build, str(tmp_path))
+
+    out = get()
+    assert get() == out and len(builds) == 1
+    assert memo.BUILD_SECONDS[f"test_artifact:{tmp_path.name}"] >= 0
+    shutil.rmtree(out)
+    out2 = get()
+    assert len(builds) == 2 and out2 != out and os.path.isdir(out2)
+    src.write_text("bb")
+    assert get() != out2 and len(builds) == 3
 
 
 def test_token_count_matches_python(spark, docs):
@@ -1358,6 +1440,78 @@ def test_panel_bm25_served_from_postings_equals_scan(spark, docs, tmp_path):
     ).collect()
     assert sorted(map(tuple, scan2)) == sorted(map(tuple, served2))
     assert any(r.n_hits for r in scan2)
+
+
+def test_canon_postings_append_dedupes_repeated_delta_rows(spark, docs, tmp_path):
+    """A delta batch that sends the same (doc_id, text) row twice adds
+    that doc once: the appended artifact equals a fresh build over
+    base ∪ distinct(delta)."""
+    from mimic2ts_spark.operators.search import (
+        append_canon_postings_artifact,
+        build_canon_postings_artifact,
+        load_canon_postings,
+    )
+
+    d = docs.select("doc_id", "text")
+    base = d.where(F.col("doc_id") % 10 != 0)
+    fresh = d.where(F.col("doc_id") % 10 == 0)
+    grown = str(tmp_path / "grown")
+    build_canon_postings_artifact(spark, grown, base)
+    append_canon_postings_artifact(spark, grown, fresh.unionByName(fresh))
+    fresh_build = str(tmp_path / "fresh")
+    build_canon_postings_artifact(spark, fresh_build, base.unionByName(fresh))
+
+    def rows(out):
+        return [
+            sorted(map(tuple, df.collect()))
+            for df in load_canon_postings(spark, out)
+        ]
+
+    assert rows(grown) == rows(fresh_build)
+
+
+def test_canon_postings_meta_write_leaves_no_partial_file(
+    spark, tmp_path, monkeypatch
+):
+    """json.dump raising mid-write (a crash) must leave neither a
+    truncated _canon_postings_meta.json nor a .tmp file, on the first
+    build and on an append (which keeps the previous meta)."""
+    import json
+    import os
+
+    from mimic2ts_spark.operators.search import (
+        append_canon_postings_artifact,
+        build_canon_postings_artifact,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma delta")], "doc_id long, text string"
+    )
+    real_dump = json.dump
+
+    def crash(obj, f, *a, **kw):
+        f.write('{"text_col": ')
+        raise RuntimeError("crash mid-write")
+
+    first = str(tmp_path / "first")
+    monkeypatch.setattr(json, "dump", crash)
+    with pytest.raises(RuntimeError, match="crash mid-write"):
+        build_canon_postings_artifact(spark, first, corpus)
+    assert os.listdir(first) and not [
+        n for n in os.listdir(first) if n.startswith("_canon_postings_meta")
+    ]
+
+    monkeypatch.setattr(json, "dump", real_dump)
+    grown = str(tmp_path / "grown")
+    build_canon_postings_artifact(spark, grown, corpus)
+    meta_path = os.path.join(grown, "_canon_postings_meta.json")
+    before = open(meta_path).read()
+    delta = spark.createDataFrame([(3, "epsilon")], "doc_id long, text string")
+    monkeypatch.setattr(json, "dump", crash)
+    with pytest.raises(RuntimeError, match="crash mid-write"):
+        append_canon_postings_artifact(spark, grown, delta)
+    assert open(meta_path).read() == before
+    assert not os.path.exists(meta_path + ".tmp")
 
 
 def test_semantic_pairs_subset_of_bruteforce(spark, embs):

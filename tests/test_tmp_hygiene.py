@@ -46,3 +46,21 @@ def test_no_direct_mkdtemp_left_in_engine():
         if "tempfile.mkdtemp(" in src and "def session_tmpdir" not in src:
             offenders.append(path)
     assert offenders == []
+
+
+def test_one_fingerprint_and_no_read_wrappers_in_engine():
+    """The file-content fingerprint lives in memo.py alone, and no
+    module wraps the memoized parquet read in a `_memo_read` of its own
+    (a fourth fingerprint copy or a revived wrapper fails here)."""
+    import glob
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "mimic2ts_spark")
+    mtime_users, wrappers = [], []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        src = open(path).read()
+        if "st_mtime_ns" in src:
+            mtime_users.append(os.path.basename(path))
+        if "def _memo_read" in src:
+            wrappers.append(os.path.basename(path))
+    assert mtime_users == ["memo.py"]
+    assert wrappers == []
