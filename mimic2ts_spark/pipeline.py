@@ -17,6 +17,8 @@ The CLI's CSV sink does not use the dense plan. `tagged_long_form`
 unions the enabled sources' events ahead of one bucketize and one
 composite-key agg, so a run shuffles its events once; the per-stay
 writer fills each stay's grid while it pivots (`write_csv_sink`).
+Building that plan runs no Spark job (the CSV headers are read on the
+driver), and a thread brings up the writer's Python workers meanwhile.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import functools
 from dataclasses import dataclass, field
 from collections.abc import Sequence
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,7 +39,11 @@ from mimic2ts_spark.operators.time_ops import (
     clamp_floor,
     parse_epoch_seconds,
 )
-from mimic2ts_spark.sinks import write_stay_matrices, write_empty_stay_files
+from mimic2ts_spark.sinks import (
+    start_python_workers,
+    write_empty_stay_files,
+    write_stay_matrices,
+)
 
 DEFAULT_TIMESTEP = 3600  # reference CLI default (/root/reference/src/mimic2ts/__main__.py:28-33)
 
@@ -302,14 +309,47 @@ def tagged_long_form(aggregators: Sequence[BaseAggregator]) -> DataFrame:
     )
 
 
+def _in_thread(fn, *args):
+    """Run `fn(*args)` in a thread that inherits this thread's Spark job
+    properties; returns a function that joins the thread and returns the
+    exception `fn` raised, or None."""
+    errors: list[Exception] = []
+
+    def run():
+        try:
+            fn(*args)
+        except Exception as e:
+            errors.append(e)
+
+    thread = InheritableThread(run)
+    thread.start()
+
+    def join():
+        thread.join()
+        return errors[0] if errors else None
+
+    return join
+
+
 def write_csv_sink(aggregators: Sequence[BaseAggregator]) -> None:
     """Write every (stay, source) CSV of the given aggregators (S3/S4):
     one grouped writer over their tagged sparse aggregate and one
     empty-stay pass. The aggregators share dst_path, the requested stays
-    and the timestep."""
+    and the timestep.
+
+    While the driver builds the plan, a thread brings up the Python
+    workers that the writer's tasks then reuse
+    (`sinks.start_python_workers`). It is joined before the sink action,
+    and its error re-raised, so its tasks never take a slot from the sink."""
     first = aggregators[0]
     names = tuple(agg.name for agg in aggregators)
-    produced = write_stay_matrices(tagged_long_form(aggregators), first.dst_path, names)
+    join_warm_up = _in_thread(start_python_workers, first.spark)
+    try:
+        produced = write_stay_matrices(tagged_long_form(aggregators), first.dst_path, names)
+    finally:
+        warm_up_error = join_warm_up()
+    if warm_up_error is not None:
+        raise warm_up_error
     write_empty_stay_files(first.requested_stays(), produced, first.dst_path, names)
 
 

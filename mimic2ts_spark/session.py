@@ -30,6 +30,12 @@ def get_spark(
       `createDataFrame`). The Python UDF boundaries (the CSV sink's Arrow
       grouped writer + numpy grid, multimodal decode) exchange Arrow
       batches regardless.
+    - Python workers forked by `mimic2ts_spark.daemon`: the stock
+      `pyspark.daemon`, imported from the installed, compiled pyspark when
+      its version equals that of Spark's `pyspark.zip` (a daemon started
+      from the zip compiles every module it imports). Like every Python
+      UDF of the package, the worker must be able to import
+      `mimic2ts_spark`.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:
@@ -48,6 +54,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "mimic2ts_spark.daemon")
         # 128 MiB input splits: good default for parquet at any scale.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Whole-stage codegen emits a class per plan; a many-query session

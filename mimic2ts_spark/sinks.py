@@ -14,6 +14,8 @@ column, and an Arrow grouped writer with a numpy grid kernel builds and
 writes each stay's grids (scatter into features × 0..total_windows,
 ffill, zero-fill), formatting them as pandas' `to_csv` does. One
 `mapInArrow` pass writes the header-only files of event-less stays.
+`start_python_workers` brings up the Python workers that the writer's
+tasks reuse; `pipeline.write_csv_sink` runs it while the driver plans.
 Each file, and the run manifest, is written under a temp name and
 renamed into place, so a killed or retried task never leaves a truncated
 file. The module imports no pandas, so a Python worker that unpickles
@@ -31,7 +33,7 @@ from collections.abc import Iterable, Iterator, Sequence
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 PARQUET_STAY_BUCKETS = 256
@@ -188,6 +190,26 @@ def write_stay_matrices(
         long_df.repartition(parts, "stay_id")
         .groupBy("stay_id")
         .applyInArrow(_write, schema="stay_id long, n_features long")
+    )
+
+
+def _pass_through(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    return batches
+
+
+def start_python_workers(spark: SparkSession) -> None:
+    """Bring up the session's Python daemon and one Arrow worker per task
+    slot: an identity `mapInArrow` over `defaultParallelism` one-row
+    partitions into a `noop` sink. The workers stay idle after it, with
+    this module imported (for `_pass_through`), and the writer's Arrow
+    tasks reuse them instead of starting their own."""
+    n = spark.sparkContext.defaultParallelism
+    (
+        spark.range(n, numPartitions=n)
+        .mapInArrow(_pass_through, schema="id long")
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
     )
 
 

@@ -26,6 +26,44 @@ _TABLES = {
 }
 
 
+def _header_line(spark: SparkSession, path: str) -> str | None:
+    """The first line of the text at `path` as `spark.read.text(path).first()`
+    returns it, read on the driver through the session's Hadoop
+    `FileSystem` (any URI scheme, globs, compression codecs): a UTF-8 BOM
+    and the line ending are stripped. A directory reads as its visible
+    files (not `_`/`.`-prefixed), the largest first, as Spark orders its
+    input splits. None when every file is empty; FileNotFoundError
+    naming `path` when nothing matches it."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    pattern = jvm.org.apache.hadoop.fs.Path(path)
+    fs = pattern.getFileSystem(conf)
+    matched = fs.globStatus(pattern)
+    if not matched:
+        raise FileNotFoundError(f"{path} does not exist")
+    files = []
+    for status in matched:
+        listed = fs.listStatus(status.getPath()) if status.isDirectory() else [status]
+        files += [
+            f for f in listed
+            if f.isFile() and f.getLen() > 0 and not f.getPath().getName().startswith(("_", "."))
+        ]
+    codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    for f in sorted(files, key=lambda f: (-f.getLen(), f.getPath().toString())):
+        stream = fs.open(f.getPath())
+        try:
+            codec = codecs.getCodec(f.getPath())
+            if codec is not None:
+                stream = codec.createInputStream(stream)
+            reader = jvm.java.io.InputStreamReader(stream, "UTF-8")
+            line = jvm.java.io.BufferedReader(reader).readLine()
+        finally:
+            stream.close()
+        if line is not None:
+            return line.removeprefix("\ufeff")
+    return None
+
+
 def read_mimic_csv(spark: SparkSession, mimic_path: str, table: str) -> DataFrame:
     """Schema-first CSV scan of a MIMIC icu/ table (S1/S2), resolved BY
     NAME against the file header.
@@ -35,17 +73,17 @@ def read_mimic_csv(spark: SparkSession, mimic_path: str, table: str) -> DataFram
     schema-apply would silently shift values into the wrong columns. Like
     the reference's partial dtype dict keyed by column name
     (/root/reference/src/mimic2ts/__init__.py:12-46,240-245), the header
-    row (one tiny driver-side job) maps each file column to its declared
-    type — undeclared columns scan as strings and are pruned by the
-    projection, a missing REQUIRED column fails with a clear error, and
-    enforceSchema=false still cross-checks every file of a multi-file
-    glob against the constructed header order."""
+    row (read on the driver, `_header_line`: no Spark job) maps each file
+    column to its declared type — undeclared columns scan as strings and
+    are pruned by the projection, a missing REQUIRED column fails with a
+    clear error, and enforceSchema=false still cross-checks every file of
+    a multi-file glob against the constructed header order."""
     declared = _TABLES[table]
     path = f"{mimic_path}/icu/{table}.csv"
-    header_line = spark.read.text(path).first()
+    header_line = _header_line(spark, path)
     if header_line is None:
         raise ValueError(f"{path} is empty — no header row")
-    header = [c.strip().strip('"') for c in header_line[0].split(",")]
+    header = [c.strip().strip('"') for c in header_line.split(",")]
     by_name = {f.name: f for f in declared.fields}
     missing = sorted(set(by_name) - set(header))
     if missing:

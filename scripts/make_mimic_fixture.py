@@ -1,5 +1,6 @@
 """Deterministic synthetic MIMIC-IV icu/ fixture at an arbitrary scale —
-for CLI-surface throughput measurement (README "CLI throughput").
+for CLI-surface throughput measurement (the CLI benchmark is
+described in perfbench/README.md).
 
 Shape matches the reference's inputs (/root/reference/tools/
 sampleDataset.py column sets): icustays, d_items, chartevents,

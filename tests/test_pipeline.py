@@ -214,3 +214,36 @@ def test_csv_columns_resolved_by_name(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="missing required columns"):
         sources.read_mimic_csv(spark, str(tmp_path / "missing"), "icustays")
+
+
+def test_cli_planning_starts_no_spark_job(spark, mimic_dir, tmp_path):
+    """Building the CLI's sink plan (the aggregators, the tagged sparse
+    aggregate, the grouped writer) runs no Spark job: the CSV headers are
+    read on the driver."""
+    from mimic2ts_spark import pipeline
+
+    sc = spark.sparkContext
+    sc.setJobGroup("cli_planning", "cli_planning")
+    try:
+        aggs = EventsAggregator(spark, mimic_dir, str(tmp_path)).aggregators
+        long_df = pipeline.tagged_long_form(aggs)
+        pipeline.write_stay_matrices(long_df, str(tmp_path), tuple(a.name for a in aggs))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("cli_planning")) == []
+
+
+def test_worker_warm_up_error_propagates_from_csv_sink(spark, mimic_dir, tmp_path, monkeypatch):
+    """An error in the thread that brings up the Python workers is raised
+    by `write_csv_sink`, before the sink action writes anything."""
+    from mimic2ts_spark import pipeline
+
+    def fail(_spark):
+        raise RuntimeError("warm-up failed")
+
+    monkeypatch.setattr(pipeline, "start_python_workers", fail)
+    dst = tmp_path / "out"
+    aggs = EventsAggregator(spark, mimic_dir, str(dst)).aggregators
+    with pytest.raises(RuntimeError, match="warm-up failed"):
+        pipeline.write_csv_sink(aggs)
+    assert not dst.exists()
