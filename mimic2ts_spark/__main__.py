@@ -26,12 +26,22 @@ def _read_id_list(path: str | None, col: str) -> list[int] | None:
     return pd.read_csv(path)[col].astype(int).to_list()
 
 
+def _timestep(text: str) -> int:
+    """`--timestep`: a positive whole number of seconds."""
+    try:
+        if int(text) > 0:
+            return int(text)
+    except ValueError:
+        pass
+    raise argparse.ArgumentTypeError(f"must be a positive number of seconds, got {text!r}")
+
+
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(prog="mimic2ts_spark")
     p.add_argument("src", help="MIMIC root (contains icu/*.csv)")
     p.add_argument("dst", help="output directory")
     p.add_argument("--exclude", default="", help="comma list of sources to skip")
-    p.add_argument("--timestep", type=int, default=3600)
+    p.add_argument("--timestep", type=_timestep, default=3600)
     p.add_argument("--ffill", action="store_true")
     p.add_argument("--stay-ids", default=None, help="CSV with a stay_id column")
     p.add_argument("--feature-ids", default=None, help="CSV with a feature_id column")
@@ -39,6 +49,12 @@ def main(argv: list[str] | None = None) -> None:
     args = p.parse_args(argv)
 
     excluded = {s.strip() for s in args.exclude.split(",") if s.strip()}
+    unknown = sorted(excluded - set(EventsAggregator.SOURCES))
+    if unknown:
+        p.error(
+            f"argument --exclude: unknown source(s) {', '.join(unknown)}; "
+            f"valid sources: {', '.join(EventsAggregator.SOURCES)}"
+        )
     extra = (
         {"spark.sql.files.maxPartitionBytes": str(args.max_partition_bytes)}
         if args.max_partition_bytes
@@ -55,10 +71,7 @@ def main(argv: list[str] | None = None) -> None:
         feature_ids=_read_id_list(args.feature_ids, "feature_id"),
         timestep_seconds=args.timestep,
         ffill=args.ffill,
-        chartevents="chartevents" not in excluded,
-        inputevents="inputevents" not in excluded,
-        outputevents="outputevents" not in excluded,
-        procedureevents="procedureevents" not in excluded,
+        **{name: name not in excluded for name in EventsAggregator.SOURCES},
     ).do_agg()
 
     write_manifest(args.dst, __version__, time.time() - t0, vars(args))

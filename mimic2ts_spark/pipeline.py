@@ -17,15 +17,19 @@ The CLI's CSV sink does not use the dense plan. `tagged_long_form`
 unions the enabled sources' events ahead of one bucketize and one
 composite-key agg, so a run shuffles its events once; the per-stay
 writer fills each stay's grid while it pivots (`write_csv_sink`).
-Building that plan runs no Spark job (the CSV headers are read on the
-driver), and a thread brings up the writer's Python workers meanwhile.
+A run's first Spark job brings up the writer's Python workers. It is
+started before the driver builds any DataFrame (the aggregators load the
+stay dimension lazily). While it runs, the driver builds the sink plan,
+which starts no Spark job (the CSV headers are read on the driver), and
+starts the sink action.
 """
 
 from __future__ import annotations
 
 import functools
+import threading
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
-from collections.abc import Sequence
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
@@ -114,6 +118,16 @@ def _apply_id_filters(
     return df
 
 
+def _stay_loader(
+    spark: SparkSession, mimic_path: str, timestep_seconds: int
+) -> Callable[[], DataFrame]:
+    """A function that builds the stay dimension (`sources.load_stays`)
+    on its first call and returns that same DataFrame on every call."""
+    return functools.cache(
+        functools.partial(sources.load_stays, spark, mimic_path, timestep_seconds)
+    )
+
+
 @dataclass
 class BaseAggregator:
     """One event source → long-form (stay_id, feature_id, tidx, value).
@@ -132,14 +146,14 @@ class BaseAggregator:
     ffill: bool = False
     name: str = "base"
     combiner: str = "avg"
-    _stays: DataFrame | None = field(default=None, repr=False)
+    _stays: Callable[[], DataFrame] | None = field(default=None, repr=False)
 
     def stays(self) -> DataFrame:
+        """The stay dimension, built on the first call (constructing an
+        aggregator builds no DataFrame) and the same DataFrame after."""
         if self._stays is None:
-            self._stays = sources.load_stays(
-                self.spark, self.mimic_path, self.timestep_seconds
-            )
-        return self._stays
+            self._stays = _stay_loader(self.spark, self.mimic_path, self.timestep_seconds)
+        return self._stays()
 
     def requested_stays(self) -> DataFrame:
         """The stay universe: explicit list, else all of icustays
@@ -309,26 +323,31 @@ def tagged_long_form(aggregators: Sequence[BaseAggregator]) -> DataFrame:
     )
 
 
-def _in_thread(fn, *args):
-    """Run `fn(*args)` in a thread that inherits this thread's Spark job
-    properties; returns a function that joins the thread and returns the
-    exception `fn` raised, or None."""
-    errors: list[Exception] = []
+class _Background:
+    """`fn(*args)` run in a thread that inherits this thread's Spark job
+    properties. The constructor returns once `fn` has been entered (or
+    the thread ended before it could be, copying those properties);
+    `error` is the exception `fn` raised, or None while it runs or when
+    it returned."""
 
-    def run():
-        try:
-            fn(*args)
-        except Exception as e:
-            errors.append(e)
+    def __init__(self, fn, *args):
+        self.error: Exception | None = None
+        entered = threading.Event()
 
-    thread = InheritableThread(run)
-    thread.start()
+        def run():
+            entered.set()
+            try:
+                fn(*args)
+            except Exception as e:
+                self.error = e
 
-    def join():
-        thread.join()
-        return errors[0] if errors else None
+        self._thread = InheritableThread(run)
+        self._thread.start()
+        while not entered.wait(0.01) and self._thread.is_alive():
+            pass
 
-    return join
+    def join(self) -> None:
+        self._thread.join()
 
 
 def write_csv_sink(aggregators: Sequence[BaseAggregator]) -> None:
@@ -337,20 +356,26 @@ def write_csv_sink(aggregators: Sequence[BaseAggregator]) -> None:
     empty-stay pass. The aggregators share dst_path, the requested stays
     and the timestep.
 
-    While the driver builds the plan, a thread brings up the Python
-    workers that the writer's tasks then reuse
-    (`sinks.start_python_workers`). It is joined before the sink action,
-    and its error re-raised, so its tasks never take a slot from the sink."""
+    A thread first brings up the Python workers that the writer's tasks
+    then reuse (`sinks.start_python_workers`): its job is submitted while
+    the driver builds the sink plan, stay dimension included, so FIFO
+    scheduling runs its `defaultParallelism` tasks ahead of the sink's,
+    whose Arrow writer comes after the scan and aggregate stages. The
+    sink action does not wait for it; the thread is joined after the
+    action, and joined too when the sink fails, whose error then wins.
+    A warm-up error is re-raised; if it came before the sink action was
+    due, the action is not started, so nothing is written."""
     first = aggregators[0]
     names = tuple(agg.name for agg in aggregators)
-    join_warm_up = _in_thread(start_python_workers, first.spark)
+    warm_up = _Background(start_python_workers, first.spark)
     try:
         produced = write_stay_matrices(tagged_long_form(aggregators), first.dst_path, names)
+        if warm_up.error is None:
+            write_empty_stay_files(first.requested_stays(), produced, first.dst_path, names)
     finally:
-        warm_up_error = join_warm_up()
-    if warm_up_error is not None:
-        raise warm_up_error
-    write_empty_stay_files(first.requested_stays(), produced, first.dst_path, names)
+        warm_up.join()
+    if warm_up.error is not None:
+        raise warm_up.error
 
 
 class EventsAggregator:
@@ -358,7 +383,10 @@ class EventsAggregator:
     (/root/reference/src/mimic2ts/__init__.py:461-539): one aggregator per
     enabled source, all sharing one SparkSession and one stay dimension.
     `do_agg` writes every source in one sink pass (`write_csv_sink`), not
-    one job chain per source."""
+    one job chain per source. Constructing it builds no DataFrame: the
+    aggregators share one stay dimension, built when a plan first needs
+    it, which in `do_agg` is after the writer's Python workers have
+    started coming up."""
 
     _CLASSES = {
         "chartevents": ChartEventAggregator,
@@ -366,6 +394,7 @@ class EventsAggregator:
         "outputevents": OutputEventAggregator,
         "procedureevents": ProcedureEventAggregator,
     }
+    SOURCES = tuple(_CLASSES)
 
     def __init__(
         self,
@@ -393,10 +422,9 @@ class EventsAggregator:
             for name, cls in self._CLASSES.items()
             if enabled[name]
         ]
-        if self.aggregators:
-            stays = sources.load_stays(spark, mimic_path, timestep_seconds)
-            for agg in self.aggregators:
-                agg._stays = stays
+        stays = _stay_loader(spark, mimic_path, timestep_seconds)
+        for agg in self.aggregators:
+            agg._stays = stays
 
     def do_agg(self) -> None:
         if self.aggregators:

@@ -36,6 +36,17 @@ def get_spark(
       from the zip compiles every module it imports). Like every Python
       UDF of the package, the worker must be able to import
       `mimic2ts_spark`.
+    - No Python call-site capture
+      (`spark.python.sql.dataFrameDebugging.enabled=false`). With it on,
+      pyspark wraps every Column function call (`F.col`, `cast`,
+      `F.lit`, ...) to record the calling file:line in the JVM: several
+      py4j round trips per call (a third of a CLI run's, 2,599 → 1,606
+      on 480 stays) and an `import IPython` when IPython is installed.
+      What an error loses: an `AnalysisException` or a runtime error in
+      a DataFrame expression no longer names the Python file:line that
+      built the expression; its error class and message (the column or
+      function at fault) stay. pyspark reads the setting once per
+      process, from the first session that needs it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:
@@ -55,6 +66,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "mimic2ts_spark.daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # 128 MiB input splits: good default for parquet at any scale.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Whole-stage codegen emits a class per plan; a many-query session

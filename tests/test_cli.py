@@ -64,3 +64,23 @@ def test_cli_stay_ids_restrict_stays(run_cli, full_tree, tmp_path):
 def test_cli_exclude_every_source_writes_only_manifest(run_cli):
     dst = run_cli("--exclude", ",".join(SOURCES))
     assert os.listdir(dst) == ["readme.txt"]
+
+
+def test_cli_rejects_unknown_exclude_source(capsys, tmp_path):
+    """A misspelt source is an input error, not a silent full run."""
+    with pytest.raises(SystemExit) as exit_info:
+        main(["src", str(tmp_path / "out"), "--exclude", "chartevent,inputevents"])
+    assert exit_info.value.code == 2
+    err = capsys.readouterr().err
+    assert "argument --exclude" in err and "chartevent;" in err
+    assert all(source in err for source in SOURCES)
+    assert not (tmp_path / "out").exists()
+
+
+@pytest.mark.parametrize("timestep", ["-3600", "0", "1.5"])
+def test_cli_rejects_non_positive_timestep(capsys, tmp_path, timestep):
+    with pytest.raises(SystemExit) as exit_info:
+        main(["src", str(tmp_path / "out"), "--timestep", timestep])
+    assert exit_info.value.code == 2
+    assert "argument --timestep: must be a positive number of seconds" in capsys.readouterr().err
+    assert not (tmp_path / "out").exists()

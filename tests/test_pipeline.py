@@ -7,10 +7,13 @@ from __future__ import annotations
 import math
 import os
 import shutil
+import threading
+import time
 
 import pandas as pd
 import pytest
 
+from mimic2ts_spark import pipeline, sources
 from mimic2ts_spark.pipeline import (
     ChartEventAggregator,
     EventsAggregator,
@@ -247,3 +250,75 @@ def test_worker_warm_up_error_propagates_from_csv_sink(spark, mimic_dir, tmp_pat
     with pytest.raises(RuntimeError, match="warm-up failed"):
         pipeline.write_csv_sink(aggs)
     assert not dst.exists()
+
+
+def _record_reads(monkeypatch, calls: list) -> None:
+    """Append ("read", table) to `calls` on every `sources.read_mimic_csv`."""
+    read = sources.read_mimic_csv
+
+    def recorded(spark, mimic_path, table):
+        calls.append(("read", table))
+        return read(spark, mimic_path, table)
+
+    monkeypatch.setattr(sources, "read_mimic_csv", recorded)
+
+
+def test_events_aggregator_builds_no_dataframe(spark, mimic_dir, tmp_path, monkeypatch):
+    """Constructing the orchestrator reads no CSV; its aggregators share
+    one stay dimension, built on first use."""
+    calls: list = []
+    _record_reads(monkeypatch, calls)
+    aggs = EventsAggregator(spark, mimic_dir, str(tmp_path)).aggregators
+    assert calls == []
+    assert all(agg.stays() is aggs[0].stays() for agg in aggs)
+    assert calls == [("read", "icustays")]
+
+
+def test_csv_sink_starts_the_warm_up_before_its_first_read(
+    spark, mimic_dir, tmp_path, monkeypatch
+):
+    calls: list = []
+    _record_reads(monkeypatch, calls)
+    monkeypatch.setattr(pipeline, "start_python_workers", lambda _spark: calls.append("warm-up"))
+    pipeline.write_csv_sink(EventsAggregator(spark, mimic_dir, str(tmp_path)).aggregators)
+    assert calls[0] == "warm-up"
+    assert ("read", "icustays") in calls
+
+
+def test_csv_sink_action_does_not_wait_for_the_warm_up(spark, mimic_dir, tmp_path, monkeypatch):
+    """The sink action starts while the warm-up job still runs."""
+    action_started = threading.Event()
+    warm_up_saw_action: list[bool] = []
+    monkeypatch.setattr(
+        pipeline, "start_python_workers",
+        lambda _spark: warm_up_saw_action.append(action_started.wait(10)),
+    )
+    monkeypatch.setattr(pipeline, "write_empty_stay_files", lambda *args: action_started.set())
+    pipeline.write_csv_sink(EventsAggregator(spark, mimic_dir, str(tmp_path)).aggregators)
+    assert warm_up_saw_action == [True]
+
+
+def test_failed_csv_sink_joins_the_warm_up_and_raises_its_own_error(
+    spark, mimic_dir, tmp_path, monkeypatch
+):
+    """A sink action that raises while the warm-up still runs: the
+    thread is joined, and the sink's error, not the warm-up's, is raised."""
+    action_started = threading.Event()
+    threads: list[threading.Thread] = []
+
+    def warm_up(_spark):
+        threads.append(threading.current_thread())
+        action_started.wait(10)
+        time.sleep(0.2)
+        raise RuntimeError("warm-up failed")
+
+    def failing_action(*args):
+        action_started.set()
+        raise RuntimeError("sink failed")
+
+    monkeypatch.setattr(pipeline, "start_python_workers", warm_up)
+    monkeypatch.setattr(pipeline, "write_empty_stay_files", failing_action)
+    aggs = EventsAggregator(spark, mimic_dir, str(tmp_path)).aggregators
+    with pytest.raises(RuntimeError, match="sink failed"):
+        pipeline.write_csv_sink(aggs)
+    assert len(threads) == 1 and not threads[0].is_alive()
