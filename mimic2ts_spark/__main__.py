@@ -20,10 +20,21 @@ from mimic2ts_spark import EventsAggregator, __version__, get_spark
 from mimic2ts_spark.sinks import write_manifest
 
 
-def _read_id_list(path: str | None, col: str) -> list[int] | None:
+def _read_id_list(
+    p: argparse.ArgumentParser, flag: str, path: str | None, col: str
+) -> list[int] | None:
+    """The integer `col` of the CSV at `path`; an unreadable file, a
+    missing column or a non-integer id is an argparse error naming `flag`
+    and `path`, raised before the JVM starts."""
     if not path:
         return None
-    return pd.read_csv(path)[col].astype(int).to_list()
+    try:
+        table = pd.read_csv(path)
+        if col not in table.columns:
+            raise ValueError(f"no {col} column")
+        return table[col].astype(int).to_list()
+    except (OSError, ValueError) as e:
+        p.error(f"argument {flag}: cannot read {col} ids from {path}: {e}")
 
 
 def _timestep(text: str) -> int:
@@ -55,6 +66,8 @@ def main(argv: list[str] | None = None) -> None:
             f"argument --exclude: unknown source(s) {', '.join(unknown)}; "
             f"valid sources: {', '.join(EventsAggregator.SOURCES)}"
         )
+    stay_ids = _read_id_list(p, "--stay-ids", args.stay_ids, "stay_id")
+    feature_ids = _read_id_list(p, "--feature-ids", args.feature_ids, "feature_id")
     extra = (
         {"spark.sql.files.maxPartitionBytes": str(args.max_partition_bytes)}
         if args.max_partition_bytes
@@ -67,8 +80,8 @@ def main(argv: list[str] | None = None) -> None:
         spark,
         args.src,
         args.dst,
-        stay_ids=_read_id_list(args.stay_ids, "stay_id"),
-        feature_ids=_read_id_list(args.feature_ids, "feature_id"),
+        stay_ids=stay_ids,
+        feature_ids=feature_ids,
         timestep_seconds=args.timestep,
         ffill=args.ffill,
         **{name: name not in excluded for name in EventsAggregator.SOURCES},

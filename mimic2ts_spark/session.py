@@ -9,8 +9,85 @@ harness) gets an identical, scale-aware session.
 from __future__ import annotations
 
 import os
+import threading
+import time
 
+from py4j.protocol import Py4JError
+from pyspark import SparkConf, SparkContext
+from pyspark.java_gateway import launch_gateway
 from pyspark.sql import SparkSession
+
+# Wall seconds of the latest fresh session start in this process, by
+# phase: "gateway" (JVM launch), "context" (the JavaSparkContext),
+# "session" (the JVM SparkSession), "join" (waiting for the warm-ups
+# after the session is built) and "warm_up.<name>" for each warm-up that
+# finished without error. A call that reuses a session records nothing.
+START_SECONDS: dict[str, float] = {}
+
+
+def _apply_extension_providers(jvm) -> None:
+    # What `SparkSession.loadExtensions` does, on a throwaway
+    # SparkSessionExtensions: spark-mllib's provider initializes Scala's
+    # runtime reflection universe.
+    provider = jvm.java.lang.Class.forName("org.apache.spark.sql.SparkSessionExtensionsProvider")
+    extensions = jvm.org.apache.spark.sql.SparkSessionExtensions()
+    found = jvm.java.util.ServiceLoader.load(provider).iterator()
+    while found.hasNext():
+        found.next().apply(extensions)
+
+
+# name -> fn(jvm): JVM class initialization that the session start would
+# otherwise do later, on its one thread.
+_WARM_UPS = {
+    "extensions": _apply_extension_providers,
+    "function_registry": lambda jvm: jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.analysis.FunctionRegistry$"
+    ),
+    # The SQL parser (antlr), first used by the first DataFrame's schema.
+    "sql_parser": lambda jvm: jvm.org.apache.spark.sql.types.DataType.fromDDL("id long"),
+}
+
+
+def _warm_up(name: str, warm, jvm) -> None:
+    t0 = time.perf_counter()
+    try:
+        warm(jvm)
+    except Py4JError:
+        return  # the session does the same work itself, later
+    START_SECONDS[f"warm_up.{name}"] = round(time.perf_counter() - t0, 3)
+
+
+def _start(builder: SparkSession.Builder, conf: SparkConf) -> SparkSession:
+    """A fresh session: the gateway, then the context while the warm-ups
+    run on helper threads, then the session; the helpers are joined
+    before return."""
+    START_SECONDS.clear()
+    t0 = time.perf_counter()
+    gateway = launch_gateway(conf)
+    t1 = time.perf_counter()
+    helpers = [
+        threading.Thread(
+            target=_warm_up, args=(name, warm, gateway.jvm), name=f"warm_up.{name}", daemon=True
+        )
+        for name, warm in _WARM_UPS.items()
+    ]
+    for helper in helpers:
+        helper.start()
+    try:
+        SparkContext(conf=conf, gateway=gateway)
+        t2 = time.perf_counter()
+        spark = builder.getOrCreate()
+        t3 = time.perf_counter()
+    finally:
+        for helper in helpers:
+            helper.join()
+    START_SECONDS.update(
+        gateway=round(t1 - t0, 3),
+        context=round(t2 - t1, 3),
+        session=round(t3 - t2, 3),
+        join=round(time.perf_counter() - t3, 3),
+    )
+    return spark
 
 
 def get_spark(
@@ -47,6 +124,20 @@ def get_spark(
       built the expression; its error class and message (the column or
       function at fault) stay. pyspark reads the setting once per
       process, from the first session that needs it.
+
+    A fresh start (no JVM in this process yet) runs in parallel: the
+    gateway is launched with the full conf, then helper threads do JVM
+    class initialization that the session start would otherwise do later
+    on its one thread, while the JavaSparkContext is built: every
+    `SparkSessionExtensionsProvider` applied to a throwaway
+    `SparkSessionExtensions` (spark-mllib's initializes Scala's runtime
+    reflection universe), `FunctionRegistry$`, and the SQL parser that
+    the first DataFrame's schema uses. None of it depends on the context.
+    The helpers are joined before return; one that fails is ignored (the
+    session does that work itself), so the session and its conf are
+    those of a serial start. Phase seconds land in `START_SECONDS`. A
+    call that finds a JVM reuses its session through the builder and
+    starts no helper.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:
@@ -54,21 +145,22 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
 
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.python.daemon.module", "mimic2ts_spark.daemon")
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+    code_cache = "-XX:ReservedCodeCacheSize=" + os.environ.get("SPARK_CODE_CACHE", "512m")
+    options = {
+        "spark.master": master,
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "32g"),
+        "spark.ui.enabled": "false",
+        "spark.python.daemon.module": "mimic2ts_spark.daemon",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # 128 MiB input splits: good default for parquet at any scale.
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         # Whole-stage codegen emits a class per plan; a many-query session
         # (82-query bench x 3 rounds) fills the JVM's default 240 MB
         # reserved code cache, JIT compilation stalls, and late-running
@@ -77,21 +169,15 @@ def get_spark(
         # executors serving many queries.
         # SPARK_CODE_CACHE overrides for A/B diagnosis (r08: the 207-plan
         # session was suspected of saturating 512m — see CLAUDE.md).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize="
-            + os.environ.get("SPARK_CODE_CACHE", "512m"),
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize="
-            + os.environ.get("SPARK_CODE_CACHE", "512m"),
-        )
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        "spark.driver.extraJavaOptions": code_cache,
+        "spark.executor.extraJavaOptions": code_cache,
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder.config(map=options)
+    if SparkContext._gateway is None:
+        spark = _start(builder, SparkConf().setAll(options.items()))
+    else:
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

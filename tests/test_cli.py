@@ -84,3 +84,34 @@ def test_cli_rejects_non_positive_timestep(capsys, tmp_path, timestep):
     assert exit_info.value.code == 2
     assert "argument --timestep: must be a positive number of seconds" in capsys.readouterr().err
     assert not (tmp_path / "out").exists()
+
+
+@pytest.fixture
+def no_session(monkeypatch):
+    """Fail the test if the CLI starts a session."""
+
+    def fail(*args, **kwargs):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr("mimic2ts_spark.__main__.get_spark", fail)
+
+
+def test_cli_rejects_missing_id_file_before_session(capsys, tmp_path, no_session):
+    missing = str(tmp_path / "no_such_stays.csv")
+    with pytest.raises(SystemExit) as exit_info:
+        main(["src", str(tmp_path / "out"), "--stay-ids", missing])
+    assert exit_info.value.code == 2
+    err = capsys.readouterr().err
+    assert "argument --stay-ids" in err and missing in err
+    assert not (tmp_path / "out").exists()
+
+
+def test_cli_rejects_id_file_without_its_column_before_session(capsys, tmp_path, no_session):
+    ids = tmp_path / "features.csv"
+    ids.write_text("itemid\n220045\n")
+    with pytest.raises(SystemExit) as exit_info:
+        main(["src", str(tmp_path / "out"), "--feature-ids", str(ids)])
+    assert exit_info.value.code == 2
+    err = capsys.readouterr().err
+    assert "argument --feature-ids" in err and str(ids) in err and "no feature_id column" in err
+    assert not (tmp_path / "out").exists()
