@@ -12,11 +12,14 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import contextlib
+import os
 import time
 
 import pandas as pd
+from pyspark.sql import SparkSession
 
-from mimic2ts_spark import EventsAggregator, __version__, get_spark
+from mimic2ts_spark import EventsAggregator, __version__, get_spark, session
 from mimic2ts_spark.sinks import write_manifest
 
 
@@ -74,6 +77,10 @@ def main(argv: list[str] | None = None) -> None:
         else None
     )
     spark = get_spark("mimic2ts_spark_cli", extra_conf=extra)
+    # `readme.txt` marks a complete run: a re-run into the same DST drops
+    # the old one before its first job and writes its own last.
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(args.dst, "readme.txt"))
 
     t0 = time.time()
     EventsAggregator(
@@ -91,4 +98,11 @@ def main(argv: list[str] | None = None) -> None:
 
 
 if __name__ == "__main__":
-    main()
+    try:
+        main()
+    finally:
+        # A dumping JVM writes its class-data archive as it exits: wait for
+        # it, so that no JVM outlives the CLI.
+        spark = SparkSession.getActiveSession()
+        if session.CDS_STATE == "dumping" and spark is not None:
+            session.stop_and_wait(spark)

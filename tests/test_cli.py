@@ -115,3 +115,22 @@ def test_cli_rejects_id_file_without_its_column_before_session(capsys, tmp_path,
     err = capsys.readouterr().err
     assert "argument --feature-ids" in err and str(ids) in err and "no feature_id column" in err
     assert not (tmp_path / "out").exists()
+
+
+def test_failed_rerun_leaves_no_completion_marker(spark, mimic_dir, tmp_path, monkeypatch):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    dst = tmp_path / "out"
+    dst.mkdir()
+    (dst / "readme.txt").write_text("runtime seconds: 1.0\n")
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("sink failed")
+
+    monkeypatch.setattr("mimic2ts_spark.pipeline.write_stay_matrices", fail)
+    try:
+        with pytest.raises(RuntimeError, match="sink failed"):
+            main([mimic_dir, str(dst)])
+    finally:
+        spark.conf.set(key, before)
+    assert not (dst / "readme.txt").exists()

@@ -5,11 +5,15 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.find_spark_home import _find_spark_home
+
+from mimic2ts_spark import session
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -110,6 +114,7 @@ def test_fresh_start_joins_its_warm_ups(fresh_start):
     assert fresh_start["alive"] == []
     assert fresh_start["late_done"] < fresh_start["returned"]
     assert sorted(fresh_start["start_seconds"]) == [
+        "cds_check",
         "context",
         "gateway",
         "join",
@@ -142,3 +147,211 @@ def test_missing_column_error_still_names_the_column(spark):
     with pytest.raises(AnalysisException, match="no_such_column") as exc_info:
         spark.range(1).select("no_such_column").collect()
     assert exc_info.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+
+
+# --- class-data sharing ------------------------------------------------------
+#
+# Each test below starts its JVMs in subprocesses with its own
+# XDG_CACHE_HOME, so it sees only the archives it makes.
+
+# A fresh process: `get_spark` and one query, then what the CDS tests check
+# as one JSON line. With "wait" the JVM is stopped and waited for (it
+# writes its archive as it exits); otherwise it is killed unwritten.
+CDS_START = r"""
+import json, os, sys
+from mimic2ts_spark import session
+
+env = dict(os.environ)
+spark = session.get_spark("cds", shuffle_partitions=1)
+sc = spark.sparkContext
+print(json.dumps({
+    "state": session.CDS_STATE,
+    "start_seconds": session.START_SECONDS,
+    "env_unchanged": dict(os.environ) == env,
+    "jvm_args": list(
+        sc._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
+    "defaults_probe": sc.getConf().get("spark.mimic2ts.defaults_probe", None),
+    "count": spark.range(3).count(),
+}))
+sys.stdout.flush()
+if sys.argv[1:] == ["wait"]:
+    session.stop_and_wait(spark)
+else:
+    sc._gateway.proc.kill()
+    sc._gateway.proc.wait()
+"""
+
+CDS_FLAGS = ("-XX:SharedArchiveFile", "-XX:ArchiveClassesAtExit", "-Xshare")
+
+
+def _cds_env(cache, **extra) -> dict:
+    return {
+        **os.environ, "PYTHONPATH": REPO, "XDG_CACHE_HOME": str(cache),
+        "SPARK_GRAFT_CPUS": "1", "SPARK_DRIVER_MEM": "1g", **extra,
+    }
+
+
+def _cds_start(cache, *args: str, **extra) -> subprocess.Popen:
+    return subprocess.Popen(
+        [sys.executable, "-c", CDS_START, *args], cwd=REPO, env=_cds_env(cache, **extra),
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+    )
+
+
+def _result(proc: subprocess.Popen) -> dict:
+    out, err = proc.communicate(timeout=300)
+    assert proc.returncode == 0, err[-4000:]
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def _cds_files(cache) -> list[str]:
+    cds = os.path.join(str(cache), "mimic2ts_spark", "cds")
+    return sorted(n for n in os.listdir(cds) if n != "conf")
+
+
+def _tree(dst: str) -> dict[str, bytes]:
+    """Every output file, with `readme.txt`'s runtime line dropped."""
+    out = {}
+    for d, _, names in os.walk(dst):
+        for n in names:
+            with open(os.path.join(d, n), "rb") as f:
+                data = f.read()
+            if n == "readme.txt":
+                data = b"".join(
+                    line for line in data.splitlines(True) if not line.startswith(b"runtime seconds:")
+                )
+            out[os.path.relpath(os.path.join(d, n), dst)] = data
+    return out
+
+
+@pytest.fixture(scope="module")
+def cli_runs(mimic_dir, tmp_path_factory):
+    """Two `python -m mimic2ts_spark` runs into one DST with an empty
+    cache: the first dumps an archive, the second maps it. A copy of the
+    first run's dump is kept for the tests that damage it."""
+    root = tmp_path_factory.mktemp("cds_cli")
+    cache, dst, kept = root / "cache", str(root / "out"), root / "kept"
+    cds = cache / "mimic2ts_spark" / "cds"
+    runs = []
+    for _ in range(2):
+        done = subprocess.run(
+            [sys.executable, "-m", "mimic2ts_spark", mimic_dir, dst],
+            cwd=REPO, env=_cds_env(cache), capture_output=True, text=True, timeout=300,
+        )
+        assert done.returncode == 0, done.stderr[-4000:]
+        files = _cds_files(cache)
+        sidecars = [n for n in files if n.endswith(".json")]
+        pids = [json.loads((cds / n).read_text())["pid"] for n in sidecars]
+        runs.append({"files": files, "tree": _tree(dst), "stdout": done.stdout,
+                     "writers_alive": [session._alive(p) for p in pids]})
+        if not kept.exists():
+            shutil.copytree(cds, kept)
+    yield {"runs": runs, "kept": kept, "final": runs[1]["files"][0]}
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def test_cli_dump_then_map_write_the_same_tree(cli_runs):
+    first, second = cli_runs["runs"]
+    assert first["tree"] == second["tree"]
+    assert "readme.txt" in first["tree"] and len(first["tree"]) > 1
+    # The JVM's CDS warnings stay off the CLI's stdout.
+    assert first["stdout"] == second["stdout"] == ""
+
+
+def test_dumping_cli_leaves_no_jvm_and_the_next_start_promotes_its_archive(cli_runs):
+    first, second = cli_runs["runs"]
+    assert [n.rsplit(".", 1)[1] for n in first["files"]] == ["json", "tmp"]
+    assert first["writers_alive"] == [False]
+    # The second run checked the first run's dump, renamed it into place
+    # and mapped it, so it dumped nothing itself.
+    assert second["files"] == [cli_runs["final"]]
+    assert cli_runs["final"] == first["files"][0].split(".")[0] + ".jsa"
+
+
+def _kept_dump(cli_runs) -> tuple[str, str]:
+    """The first CLI run's dump: its tmp file name and its JSON's."""
+    tmp = next(n for n in os.listdir(cli_runs["kept"]) if n.endswith(".tmp"))
+    return tmp, tmp[: -len(".tmp")] + ".json"
+
+
+def _empty_cache(cache):
+    cds = cache / "mimic2ts_spark" / "cds"
+    (cds / "conf").mkdir(parents=True)
+    return cds
+
+
+@pytest.fixture
+def cache(tmp_path):
+    """An XDG_CACHE_HOME of the test's own, its archives (~150 MB each)
+    removed after the test."""
+    yield tmp_path
+    shutil.rmtree(tmp_path / "mimic2ts_spark", ignore_errors=True)
+
+
+def test_truncated_dump_is_never_promoted(cli_runs, cache):
+    cds, kept = _empty_cache(cache), cli_runs["kept"]
+    tmp, sidecar = _kept_dump(cli_runs)
+    shutil.copyfile(kept / sidecar, cds / sidecar)
+    with open(kept / tmp, "rb") as src, open(cds / tmp, "wb") as dst:
+        dst.write(src.read(os.path.getsize(kept / tmp) // 2))
+    result = _result(_cds_start(cache))
+    assert result["count"] == 3
+    # Checked and removed before the launch, so this start dumps anew.
+    assert result["state"] == "dumping"
+    assert result["start_seconds"]["cds_check"] > 0
+    assert result["env_unchanged"]
+    files = _cds_files(cache)
+    assert cli_runs["final"] not in files and tmp not in files and sidecar not in files
+
+
+@pytest.mark.parametrize("heap", ["1g", "32g"])
+def test_archive_for_another_class_path_or_heap_leaves_a_working_session(
+    cli_runs, cache, heap
+):
+    # The archive was dumped at 1g with the first cache's conf dir on the
+    # class path; at 32g the heap also has no compressed oops.
+    cds = _empty_cache(cache)
+    final = cds / (session._cds_key(session._java(), _find_spark_home(), heap) + ".jsa")
+    shutil.copyfile(cli_runs["kept"] / _kept_dump(cli_runs)[0], final)
+    result = _result(_cds_start(cache, SPARK_DRIVER_MEM=heap))
+    assert result["state"] == "mapped"
+    assert f"-XX:SharedArchiveFile={final}" in result["jvm_args"]
+    assert result["env_unchanged"]
+    assert result["count"] == 3
+
+
+def test_spark_conf_dir_turns_cds_off(tmp_path):
+    result = _result(_cds_start(tmp_path, SPARK_CONF_DIR=str(tmp_path)))
+    assert result["state"] == "off:spark_conf_dir"
+    assert result["env_unchanged"]
+    assert not [a for a in result["jvm_args"] if a.startswith(CDS_FLAGS)]
+    assert not (tmp_path / "mimic2ts_spark").exists()
+    assert result["count"] == 3
+
+
+def test_real_spark_defaults_turn_cds_off_and_are_read(tmp_path):
+    spark_home = tmp_path / "spark"
+    spark_home.mkdir()
+    real_home = _find_spark_home()
+    for name in os.listdir(real_home):
+        if name != "conf":
+            os.symlink(os.path.join(real_home, name), spark_home / name)
+    (spark_home / "conf").mkdir()
+    (spark_home / "conf" / "spark-defaults.conf").write_text("spark.mimic2ts.defaults_probe on\n")
+    result = _result(_cds_start(tmp_path, SPARK_HOME=str(spark_home)))
+    assert result["state"] == "off:spark_conf"
+    assert result["env_unchanged"]
+    assert not [a for a in result["jvm_args"] if a.startswith(CDS_FLAGS)]
+    assert result["defaults_probe"] == "on"
+    assert result["count"] == 3
+
+
+def test_two_dumping_starts_leave_one_archive(cache):
+    procs = [_cds_start(cache, "wait") for _ in range(2)]
+    results = [_result(p) for p in procs]
+    assert [r["state"] for r in results] == ["dumping", "dumping"]
+    assert sorted(n.rsplit(".", 1)[1] for n in _cds_files(cache)) == ["json", "json", "tmp", "tmp"]
+    result = _result(_cds_start(cache))
+    assert result["state"] == "mapped"
+    assert result["count"] == 3
+    assert [n.rsplit(".", 1)[1] for n in _cds_files(cache)] == ["jsa"]
